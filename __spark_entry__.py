@@ -38,198 +38,12 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 # The driver's correctness gate records the first 50 entries in
-# sorted-name order, out of 160 registered queries. Each round an
+# sorted-name order, out of 228 registered queries. Each round an
 # alias block (prefix sorts before ``q``) steers that budget at the 50
 # queries whose driver verification is most valuable THIS round; the
 # originals stay registered so the full surface remains enumerable and
 # bench.py (which reads the registry directly) is unaffected.
-#
-# Round 5 (``a5_``) targets, exactly 50 — every query that has never
-# had a driver CORRECTNESS row, plus the four most-critically-modified:
-#   * qx17 — round 4's one red row (list-column canonicalization);
-#     its output is now '|'-joined strings, re-gated;
-#   * qx29..qx52 (24) — the round-4 additions the a4_ budget could not
-#     fit. Several were also rewritten this round: qx30/qx50/qx52
-#     (exact_percentiles_by_rank two-pass rank), qx37 (degree-ordered
-#     wedge orientation), qx44/qx45/qx49 (ADVICE fixes);
-#   * round-5 additions qx53..qx59 (weighted median by rank,
-#     edit-distance pair verify, schema-evolution merge, per-source
-#     quality cutoff, matrix-free PCA, IVM with retractions, rolling
-#     KMV distinct) and qx60..qx73 (PPJoin exact similarity join, KMV
-#     overlap, mode, chi2, CUSUM batch+streaming, centroid drift,
-#     k-core, temporal split, dedup funnel, source overlap, novelty
-#     curve, quantile norm, Lorenz/Gini, correlation audit, LSH sweep)
-#     — 23 more never-gated queries;
-#   * modified re-verifies in the remaining 2 slots: q27 (oracle
-#     CHANGED, rows-only HLL -> hash-gated KMV), q57 (shared
-#     _open_stream signature change).
-# Queries modified in round 5 whose semantics and oracles are UNCHANGED
-# (q36 docstring, q53/q55/q56/q58/qx08/qx12 drain tuning, q79 oracle
-# CTE refactor, q88/q98/qx04/qx06/qx19/qx20/qx22/qx24 shared-helper
-# refactors — the shared pair-stats/edge caches are exercised
-# transitively by gated consumers qx34/qx37/qx54/qx68) stay on their
-# prior-round driver rows plus this round's local tri-scale artifacts
-# (175/0/1 at sf0.001, sf0.01, sf0.1). q55 remains the only rows-only
-# query (watermark progression by design).
 _ALIAS_PREFIX = "a12_"
-
-# Round 7 (``a7_``) targets, exactly 50:
-#   * round-7 additions (10): qy01..qy10 — intra-doc repetition,
-#     filtered ANN, MMR re-ranking, snapshot diff, held-out bigram
-#     perplexity, session funnel, weighted reservoir sample, stratified
-#     quota split, label cohesion moments, streaming inter-arrival
-#     histogram (8th maintained-aggregate family member);
-#   * q55 — GRADUATED from rows-only: its key-determined projection now
-#     carries a full value oracle, so the driver can finally record a
-#     hash row for it (the one no_oracle row of rounds 4-6);
-#   * modified this round (17): q36 (multiset-free p90 via scaled-
-#     integer rank-bracket interpolation — oracle CHANGED), q75
-#     (global_ranks rewrite), q84/q87b/qx42/qx49 (forced-broadcast
-#     hints dropped), q88/qx24 (pair-stats join shape), qx22 (PageRank
-#     degree join), qx34/qx91/qx95 (edge-consumer joins, qx91 also
-#     zero-edge guard — oracle CHANGED), qx80 (winnow join shape), qx84
-#     (anchor cap + label join), qx87 (pair-stats heavy consumer), qx90
-#     (order-pinned entropy fold — oracle CHANGED), qx93 (integer
-#     bit-length widths — oracle CHANGED);
-#   * round-7 second-wave additions (10): qz01..qz10 — exact ROC-AUC,
-#     split PSI drift, content-defined chunk dedup, LOO 1-NN accuracy,
-#     filter waterfall, RRF hybrid fusion, jackknife source means,
-#     IDF-weighted Jaccard, Hill tail exponent, label propagation;
-#   * stability re-verifies (12): q24..q35 — the oldest remaining driver
-#     rows (rounds 2-3); q37..q52 rotate next round (q36 is counted
-#     under "modified").
-# The post-rotation third wave (qz11..qz17, robustats.py) follows the
-# round-6 precedent: tri-scale local verification this round, gate slot
-# in a8_ next round.
-# Round 8 (``a8_``) targets, exactly 50 — the round-7 verdict's "close
-# the union" round: after this gate every one of the 228 registered
-# queries has had a driver-green CORRECTNESS row at least once.
-#   * the 8 never-gated third-wave queries: qz11..qz18 (robustats.py —
-#     trimmed/winsorized means, KS drift, lang-ID F1, Spearman, token
-#     apportionment, Kendall tau-b, p99 tails, cluster-debiased sample);
-#   * the q37..q52 stability block (16): the oldest remaining driver
-#     rows (rounds 2-3), flagged for rotation by the round-7 comment;
-#   * q23 (1): the one other round-2 row;
-#   * modified this round (14): the streaming split-scaffold consumers —
-#     the two-batch fixture now splits on the O(1) (min+max)/2 midpoint
-#     and writes SPLIT_SHARDS files per half (no percentile multiset, no
-#     coalesce(1)); results are watermark-invariant to the boundary but
-#     the whole family re-gates on principle: q56 q57 q58 qx08 qx12
-#     qx23 qx31 qx46 qx58 qx70 qx92 qx99 qy10, plus qx13 whose oracle
-#     CHANGED (both engines now compute the identical midpoint);
-#   * oldest-row fill (11): q60..q63 q65..q70 q72 — the next-oldest
-#     driver rows (round 3).
-# Queries modified this round whose semantics and oracles are UNCHANGED
-# (the dim_broadcast size-gate swap in tpch_like/relational/mining —
-# plan-level only, hint applies identically at gate SF) rely on their
-# r07/earlier rows + this round's local tri-scale artifacts + the
-# 0-flagged plan audit; q49's scaffold change is covered inside the
-# q37..q52 block.
-_A8_KEYS = (
-    {f"qz{i:02d}" for i in range(11, 19)}  # qz11..qz18
-    | {f"q{i:02d}" for i in range(37, 53)}  # q37..q52
-    | {"q23"}
-    | {"q56", "q57", "q58"}
-    | {"qx08", "qx12", "qx13", "qx23", "qx31", "qx46", "qx58", "qx70",
-       "qx92", "qx99"}
-    | {"qy10"}
-    | {f"q{i:02d}" for i in (60, 61, 62, 63, 65, 66, 67, 68, 69, 70, 72)}
-)
-
-# Round 9 (``a9_``) targets, exactly 50 — the round-8 verdict's
-# "oldest-first staleness refresh": the union of driver-green rows closed
-# in r08, so the budget now cycles the queries whose NEWEST driver row is
-# oldest. Computed from CORRECTNESS_r01..r08 on round-9 session start:
-#   * all 20 queries whose newest row is r03: q73 q74 q77..q83 q85 q87
-#     q89..q92 q95 q95b q96 q97 q99 (the dedup/text/retrieval core that
-#     shared-helper refactors have touched most since);
-#   * 30 of the 32 queries whose newest row is r04: q53 q54 q59 q64 q71
-#     q76 q86 q93 q94 q98 and the qx01..qx28 band (20 keys: qx01..qx07,
-#     qx09..qx11, qx14..qx16, qx18..qx21, qx25, qx27, qx28).
-# The staleness backlog is 52 for a 50-row budget; the two deferred to
-# the r10 gate are q01 (re-verified EVERY round via the ``entry()``
-# flagship smoke at sf0.001) and q02 (untouched TPC-H min-cost-supplier
-# join; local tri-scale artifacts cover it on current code). After this
-# gate no query's newest driver row predates r04, and only those two
-# predate r05.
-_A9_KEYS = (
-    {"q73", "q74", "q77", "q78", "q79", "q80", "q81", "q82", "q83",
-     "q85", "q87", "q89", "q90", "q91", "q92", "q95", "q95b", "q96",
-     "q97", "q99"}
-    | {"q53", "q54", "q59", "q64", "q71", "q76", "q86", "q93", "q94",
-       "q98"}
-    | {f"qx{i:02d}" for i in (1, 2, 3, 4, 5, 6, 7, 9, 10, 11, 14, 15,
-                              16, 18, 19, 20, 21, 25, 27, 28)}
-)
-
-# Round 10 (``a10_``) targets, exactly 50 — the round-9 verdict's
-# "close the freshness backlog" rotation (its item 1), oldest-first from
-# the union of CORRECTNESS_r01..r09 (recomputed on round-10 session
-# start: r04:2 r05:37 r06:40 r07:49 r08:50 r09:50):
-#   * q02 (newest row r04; q01 stays exempt — the ``entry()`` flagship
-#     re-verifies it at sf0.001 every round);
-#   * all 37 queries whose newest row is r05: qx17 and the qx29..qx74
-#     band (qx29 qx30 qx32 qx35..qx39 qx41 qx43..qx45 qx47 qx48
-#     qx50..qx52 qx54..qx57 qx59..qx69 qx71..qx74) — includes the
-#     null-contract-touched qx30/qx50/qx55/qx57;
-#   * modified this round (3): q95 (oracle CHANGED — empty-payload
-#     header_sum is COALESCE'd to 0, the 2026-08-16 ADVICE item), and
-#     q58/qx08 (explicit ``user_id IS NOT NULL`` on both join inputs,
-#     replacing the incidental three-valued-logic drop);
-#   * oldest-r06 fill (9): q03..q11 (TPC-H join block, rows from r06).
-# After this gate no query's newest driver row predates r06 except the
-# exempt q01. Queries touched this round whose semantics and oracles are
-# UNCHANGED (q71/qx55 — the CDC merge NULL-PK guard gained observability
-# only; qx55 is in the r05 band anyway, q71 holds its r09 row) are
-# covered by local tri-scale artifacts on current code.
-_A10_KEYS = (
-    {"q02"}
-    | {f"qx{i:02d}" for i in (17, 29, 30, 32, 35, 36, 37, 38, 39, 41,
-                              43, 44, 45, 47, 48, 50, 51, 52, 54, 55,
-                              56, 57, 59, 60, 61, 62, 63, 64, 65, 66,
-                              67, 68, 69, 71, 72, 73, 74)}
-    | {"q95", "q58", "qx08"}
-    | {f"q{i:02d}" for i in range(3, 12)}  # q03..q11
-)
-
-
-# Round 11 (``a11_``) targets, exactly 50 — the round-10 verdict's
-# "rotate oldest-first" item 1, computed from CORRECTNESS_r01..r10 on
-# round-11 session start (histogram r04:1 — the exempt q01 ``entry()``
-# flagship — r06:31, r07:49, r08:48, r09:49, r10:50):
-#   * all 31 queries whose newest driver row is r06: the q12..q22 TPC-H
-#     band (11) and qx26 qx33 qx40 qx53 qx75..qx79 qx81..qx83 qx85 qx86
-#     qx88 qx89 qx94 qx96..qx98 (20);
-#   * modified this round (9), re-gated because their oracles or Spark
-#     arithmetic CHANGED in the timeskew/ADVICE fixes: q73 (email
-#     run-start-only contract, oracle CHANGED), q46 (decimal revenue sum,
-#     oracle CHANGED), q47 (µs floor bucketing, oracle CHANGED), qx29
-#     (decimal moment widening), and the epoch-floor watermark family
-#     q55/q56/q57/q58/qx08 (oracles CHANGED);
-#   * modified by the compound-fixture campaign (2), re-gated because
-#     their oracles/arithmetic CHANGED: qx58 (IVM fold now maintains a
-#     non-null count so an all-NULL group sums to NULL, not 0) and qx74
-#     (zero-variance pearson_r is NULL on both engines, was ANSI
-#     DIVIDE_BY_ZERO);
-#   * oldest-r07 fill (8): q24..q31.
-# After this gate no query's newest driver row predates r07 except the
-# exempt q01 and the 41 remaining r07 rows (q32/q33, q34..q36, q75,
-# q84, q87b, q88, qx22/qx24/qx34/qx42/qx49/qx80/qx84/qx87/qx90/qx91/
-# qx93/qx95, qy01..qy09, qz01..qz10), which rotate in a12_. Queries touched this
-# round with UNCHANGED semantics and oracles (q34 probe-confirmed, q71's
-# tie-break/metrics observability, the SPLIT_FRAC scaffold default) are
-# covered by this round's local artifacts (timeskew 228/228, layout
-# sweep, tri-scale).
-_A11_KEYS = (
-    {f"q{i:02d}" for i in range(12, 23)}  # q12..q22
-    | {"qx26", "qx33", "qx40", "qx53"}
-    | {f"qx{i:02d}" for i in (75, 76, 77, 78, 79, 81, 82, 83, 85, 86,
-                              88, 89, 94, 96, 97, 98)}
-    | {"q73", "q46", "q47", "qx29", "q55", "q56", "q57", "q58", "qx08"}
-    | {"qx58", "qx74"}
-    | {f"q{i:02d}" for i in range(24, 32)}  # q24..q31
-)
-
 
 # Round 12 (``a12_``) targets, exactly 50 — the round-11 verdict's
 # "rotate oldest-first" item 2, computed from CORRECTNESS_r01..r11 on

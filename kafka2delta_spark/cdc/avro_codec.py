@@ -260,7 +260,7 @@ def _avro_type_to_spark(node: Any) -> tuple[T.DataType, bool]:
         return (
             T.StructType(
                 [
-                    T.StructField(f["name"], *_swap(_avro_type_to_spark(f["type"])))
+                    T.StructField(f["name"], *_avro_type_to_spark(f["type"]))
                     for f in node["fields"]
                 ]
             ),
@@ -273,10 +273,6 @@ def _avro_type_to_spark(node: Any) -> tuple[T.DataType, bool]:
         dt, n = _avro_type_to_spark(node["values"])
         return T.MapType(T.StringType(), dt, n), False
     return _PRIMITIVE_TO_SPARK[kind], False
-
-
-def _swap(t: tuple[T.DataType, bool]) -> tuple[T.DataType, bool]:
-    return (t[0], t[1])
 
 
 def avro_schema_to_spark(avro_json_schema: str) -> T.StructType:

@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from kafka2delta_spark.queryset import register
-from kafka2delta_spark.sources.tables import load_embeddings, load_table, sf_fingerprint
+from kafka2delta_spark.sources.tables import load_embeddings, load_table, memo
 
 K_SEEDS = [0, 17, 34, 51]  # fixed seed vec_ids (K = 4)
 N_ITERS = 2
@@ -286,17 +286,14 @@ def qx85_pq_codebook_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: (session, sf_dir) -> (vecs, codes+errs, per-subspace centroids, full
-#: centroids), each lazily checkpointed. qx85 (encode) and qx94 (search)
-#: consume ONE materialized quantizer build — the production IVF-PQ
-#: layout, where codebooks and code columns are index artifacts, not
-#: per-query derivations.
-_PQ_CACHE: dict = {}
-
-
 def pq_components(spark: SparkSession, sf_dir: str):
-    key = (id(spark), sf_dir, sf_fingerprint(sf_dir))
-    if key not in _PQ_CACHE:
+    """Session-memoized (vecs, codes+errs, per-subspace centroids, full
+    centroids), each lazily checkpointed. qx85 (encode) and qx94 (search)
+    consume ONE materialized quantizer build — the production IVF-PQ
+    layout, where codebooks and code columns are index artifacts, not
+    per-query derivations."""
+
+    def build():
         emb = load_embeddings(spark, sf_dir)
         vecs = emb.select("vec_id", _fixed_vec().alias("vi")).localCheckpoint(
             eager=False
@@ -317,13 +314,9 @@ def pq_components(spark: SparkSession, sf_dir: str):
             )
             codes = enc if codes is None else codes.join(enc, "vec_id")
         full_cents = lloyd_centroids(vecs).localCheckpoint(eager=False)
-        _PQ_CACHE[key] = (
-            vecs,
-            codes.localCheckpoint(eager=False),
-            sub_cents,
-            full_cents,
-        )
-    return _PQ_CACHE[key]
+        return vecs, codes.localCheckpoint(eager=False), sub_cents, full_cents
+
+    return memo(spark, "pq_quantizer", sf_dir, build=build)
 
 
 # ---------------------------------------------------------------------------

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from kafka2delta_spark.queryset import register
 from kafka2delta_spark.functions.measure import ascii_lower
-from kafka2delta_spark.sources.tables import load_embeddings, load_table, sf_fingerprint
+from kafka2delta_spark.sources.tables import load_embeddings, load_table, memo
 
 N_MINHASH = 8  # minhash permutations (seeds)
 BAND_SIZE = 2  # → 4 bands of 2 signatures each
@@ -169,27 +169,20 @@ def shingle_rows(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
     )
 
 
-#: (session, sf_dir, fingerprint, k) -> checkpointed (doc_id, shingle)
-#: rows. Eight k=3 consumers (minhash bands, pair stats, prefix-filter
-#: join, source overlap, novelty curve, band sweep, vocab coverage,
-#: weighted Jaccard) each re-shingled the corpus per query; in
-#: production this is ONE materialized postings table refreshed per
-#: ingest, so the session cache mirrors that shape (and the
-#: content-fingerprint key keeps it drift-safe, the round-7 rule).
-_SHINGLE_ROWS_CACHE: dict = {}
-
-
 def shingle_rows_cached(
     spark: SparkSession, sf_dir: str, k: int = 3
 ) -> DataFrame:
-    """Session-cached :func:`shingle_rows` (values identical; the cache
-    only changes WHERE the explode pipeline's cost is paid)."""
-    key = (id(spark), sf_dir, sf_fingerprint(sf_dir), k)
-    if key not in _SHINGLE_ROWS_CACHE:
-        _SHINGLE_ROWS_CACHE[key] = shingle_rows(
-            spark, sf_dir, k
-        ).localCheckpoint(eager=False)
-    return _SHINGLE_ROWS_CACHE[key]
+    """Session-memoized :func:`shingle_rows`, keyed on ``k`` (values
+    identical; the memo only changes WHERE the explode pipeline's cost is
+    paid). Eight k=3 consumers (minhash bands, pair stats, prefix-filter
+    join, source overlap, novelty curve, band sweep, vocab coverage,
+    weighted Jaccard) each re-shingled the corpus per query; in
+    production this is ONE materialized postings table refreshed per
+    ingest, and the memo mirrors that shape."""
+    return memo(
+        spark, "shingle_rows", sf_dir, k,
+        build=lambda: shingle_rows(spark, sf_dir, k).localCheckpoint(eager=False),
+    )
 
 
 @register(
@@ -537,15 +530,6 @@ def q88_jaccard_similar_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return jaccard_similar_pairs(spark, sf_dir, cap=SHINGLE_DF_CAP)
 
 
-#: (session, sf_dir, cap) -> materialized pair statistics. q88, qx24 and
-#: the q98 edge chain all consume the same candidate-pair pipeline whose
-#: cost is the shingle shuffle, not the (tiny) pair output — in
-#: production this is a materialized pair-stats table refreshed per
-#: ingest; here a per-(session, sf_dir, cap) checkpoint gives the same
-#: compute-once shape.
-_PAIR_STATS_CACHE: dict = {}
-
-
 def _shingle_pair_stats(
     spark: SparkSession, sf_dir: str, cap: int | str = SHINGLE_DF_CAP
 ) -> DataFrame:
@@ -554,16 +538,16 @@ def _shingle_pair_stats(
     and both set sizes attached. The document-frequency cap is a knob: an
     int, or ``"adaptive"`` to derive it from the P99 of the docs-per-
     shingle distribution (constant dropped fraction at any corpus size).
-    Output is checkpointed per (session, sf_dir, cap): pair rows are
-    bounded by n_shingles * C(cap, 2), tiny next to the corpus."""
-    # keyed on the directory CONTENT fingerprint too: a path-only key
-    # silently serves a stale checkpoint if files change mid-session
-    key = (id(spark), sf_dir, sf_fingerprint(sf_dir), cap)
-    if key not in _PAIR_STATS_CACHE:
-        _PAIR_STATS_CACHE[key] = _shingle_pair_stats_uncached(
+    Output is memoized per (session, sf_dir, cap): q88, qx24 and the q98
+    edge chain all consume this pipeline, whose cost is the shingle
+    shuffle, not the pair rows (bounded by n_shingles * C(cap, 2), tiny
+    next to the corpus)."""
+    return memo(
+        spark, "pair_stats", sf_dir, cap,
+        build=lambda: _shingle_pair_stats_uncached(
             spark, sf_dir, cap
-        ).localCheckpoint(eager=False)
-    return _PAIR_STATS_CACHE[key]
+        ).localCheckpoint(eager=False),
+    )
 
 
 def _shingle_pair_stats_uncached(
@@ -849,35 +833,25 @@ def connected_components_twophase(
     )
 
 
-#: session-scoped cache of the checkpointed Jaccard edge list — q98
-#: (clustering) and qx06 (leakage-safe split) both consume the exact
-#: same graph; deriving it twice doubles the most expensive stage of
-#: both. In production this is a materialized edges table refreshed per
-#: ingest; here a per-(session, sf_dir) checkpoint gives the same
-#: share-the-index shape.
-_EDGE_CACHE: dict = {}
-
-
 def _jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-checkpointed q88 output (doc_a, doc_b, jaccard) — ONE
-    materialized pair table feeds every similarity-graph consumer."""
-    key = (id(spark), sf_dir, sf_fingerprint(sf_dir))
-    if key not in _EDGE_CACHE:
-        _EDGE_CACHE[key] = q88_jaccard_similar_pairs(
-            spark, sf_dir
-        ).localCheckpoint(eager=True)
-    return _EDGE_CACHE[key]
+    """Session-memoized q88 output (doc_a, doc_b, jaccard) — ONE
+    materialized pair table feeds every similarity-graph consumer (q98
+    clustering, qx06 leakage-safe split, qx66 k-core, ...); deriving it
+    per consumer would repeat the most expensive stage of each."""
+    return memo(
+        spark, "jaccard_edges", sf_dir,
+        build=lambda: q88_jaccard_similar_pairs(spark, sf_dir).localCheckpoint(
+            eager=True
+        ),
+    )
 
 
 def _jaccard_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b")
 
 
-_LABELS_CACHE: dict = {}
-
-
 def _neardup_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-checkpointed q98 component labels (node, label) over the
+    """Session-memoized q98 component labels (node, label) over the
     shared Jaccard edge list. Five queries consume this assignment
     (q98, qx06, qx17, qx68 via q98, qx97 via qx06); before this cache
     each of them re-ran the whole driver-synchronized CC fixpoint loop
@@ -885,15 +859,16 @@ def _neardup_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     (and same justification) as :func:`_jaccard_pairs`: one
     materialization per session of an intermediate that is recomputed
     from the parquet inputs on every fresh session."""
-    key = (id(spark), sf_dir, sf_fingerprint(sf_dir))
-    if key not in _LABELS_CACHE:
+
+    def build() -> DataFrame:
         nodes = load_table(spark, sf_dir, "documents").select(
             F.col("doc_id").alias("node")
         )
-        _LABELS_CACHE[key] = connected_components(
+        return connected_components(
             nodes, _jaccard_edges(spark, sf_dir)
         ).localCheckpoint(eager=False)
-    return _LABELS_CACHE[key]
+
+    return memo(spark, "neardup_labels", sf_dir, build=build)
 
 
 @register(
@@ -2083,20 +2058,14 @@ def qx71_corpus_novelty_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: session-scoped cache of qx60's exact pair table — the sweep evaluator
-#: (qx75) measures LSH configs against the same ground truth qx60
-#: publishes; in production this is one materialized exact-pairs table,
-#: not two computations (same share-the-index shape as _jaccard_pairs).
-_PPJOIN_CACHE: dict = {}
-
-
 def _ppjoin_exact_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (id(spark), sf_dir, sf_fingerprint(sf_dir))
-    if key not in _PPJOIN_CACHE:
-        _PPJOIN_CACHE[key] = _ppjoin_compute(spark, sf_dir).localCheckpoint(
-            eager=True
-        )
-    return _PPJOIN_CACHE[key]
+    """Session-memoized qx60 exact pair table — the sweep evaluator
+    (qx75) measures LSH configs against the same ground truth qx60
+    publishes (same share-the-index shape as :func:`_jaccard_pairs`)."""
+    return memo(
+        spark, "ppjoin_pairs", sf_dir,
+        build=lambda: _ppjoin_compute(spark, sf_dir).localCheckpoint(eager=True),
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -40,7 +40,7 @@ from kafka2delta_spark.functions.measure import ascii_lower
 from kafka2delta_spark.sources.tables import (
     load_embeddings,
     load_table,
-    sf_fingerprint,
+    memo,
 )
 
 # BM25 parameters (Okapi defaults) and the query vocabulary — literals
@@ -93,18 +93,6 @@ def _bm25_oracle() -> str:
     """
 
 
-#: (session, sf_dir, fingerprint) -> pinned per-doc query-term stats.
-#: Both lexical scorers (qx01 BM25 and qz06's query-likelihood leg) and
-#: everything composing them (qz06 fusion, qz16 agreement) need the same
-#: three facts per document: its token count and its per-query-term
-#: occurrence counts. In production this is ONE materialized stats table
-#: refreshed per ingest; the session cache mirrors that shape
-#: (content-fingerprint key = the round-7 drift rule). Cluster-mode note:
-#: localCheckpoint trades lineage for plan truncation — an executor loss
-#: recomputes from the checkpoint's surviving blocks only.
-_TERM_STATS_CACHE: dict = {}
-
-
 def bm25_doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc query-term stats in ONE tokenize pass and NO explode:
     ``(doc_id, dl, tf_<term>…)`` with ``tf_t = size(filter(toks, = t))``
@@ -130,14 +118,17 @@ def bm25_doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def bm25_doc_stats_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-cached :func:`bm25_doc_stats` (values identical; the cache
-    only changes WHERE the tokenize pass's cost is paid)."""
-    key = (id(spark), sf_dir, sf_fingerprint(sf_dir))
-    if key not in _TERM_STATS_CACHE:
-        _TERM_STATS_CACHE[key] = bm25_doc_stats(spark, sf_dir).localCheckpoint(
-            eager=False
-        )
-    return _TERM_STATS_CACHE[key]
+    """Session-memoized :func:`bm25_doc_stats` (values identical; the memo
+    only changes WHERE the tokenize pass's cost is paid). Both lexical
+    scorers (qx01 BM25 and qz06's query-likelihood leg) and everything
+    composing them (qz06 fusion, qz16 agreement) need the same per-doc
+    token and query-term counts. Cluster-mode note: localCheckpoint
+    trades lineage for plan truncation — an executor loss recomputes
+    from the checkpoint's surviving blocks only."""
+    return memo(
+        spark, "bm25_doc_stats", sf_dir,
+        build=lambda: bm25_doc_stats(spark, sf_dir).localCheckpoint(eager=False),
+    )
 
 
 @register("qx01_bm25_retrieval", oracle=_bm25_oracle())

@@ -20,16 +20,8 @@ from pyspark.sql import SparkSession
 
 
 def delta_available() -> bool:
-    """Gate for the delta-spark leg. Re-probed round 12 (2026-08-16):
-    ``import delta`` still fails, no ``delta-*.jar`` anywhere on disk, no
-    ivy/maven cache, and ``pip download delta-spark`` still dies at DNS
-    resolution ("Name or service not known" against the package index),
-    so the round-9 finding — a live ``spark.jars.packages
-    io.delta:delta-spark_2.13:4.0.0`` attempt dies with UNRESOLVED
-    DEPENDENCIES — cannot have changed (Maven unreachable from this
-    sandbox; installs forbidden). The jar-free MERGE narrowing stands: clause strings are
-    spec-pure (cdc/merge.py) and an interpreter reproduces the
-    property-tested parquet merge (tests/test_delta_merge_spec.py)."""
+    """True when delta-spark is importable (jar + python pkg present);
+    without it the CDC sink falls back to ParquetStateStore."""
     try:
         import delta  # noqa: F401
 

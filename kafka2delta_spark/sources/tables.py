@@ -9,6 +9,7 @@ datasets (or Delta tables); nothing downstream assumes single-file inputs.
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -30,14 +31,12 @@ def sf_fingerprint(sf_dir: str) -> tuple:
     """Content fingerprint of a data directory: (relative name, size,
     mtime_ns) of every parquet file under it, one directory level deep.
 
-    Session caches of compute-once materializations (pair stats, edge
-    lists, PQ quantizers) key on this in addition to ``(id(spark),
-    sf_dir)``: a cache keyed on the PATH alone silently serves stale
-    checkpoints if files under the path are rewritten mid-session. The
-    scan is metadata-only (os.scandir stat calls, no data reads) — a few
-    dozen stats per cache probe. Missing directories fingerprint to an
-    empty tuple so cache probes never raise before Spark's own reader
-    does."""
+    Every :func:`memo` key includes it next to ``sf_dir``: a memo keyed
+    on the PATH alone silently serves stale checkpoints if files under
+    the path are rewritten mid-session. The scan is metadata-only
+    (os.scandir stat calls, no data reads) — a few dozen stats per memo
+    probe. Missing directories fingerprint to an empty tuple so memo
+    probes never raise before Spark's own reader does."""
     entries = []
     try:
         with os.scandir(sf_dir) as it:
@@ -60,6 +59,38 @@ def sf_fingerprint(sf_dir: str) -> tuple:
     except OSError:
         return ()
     return tuple(entries)
+
+
+_MEMO_ATTR = "_k2d_memo"
+# Re-entrant: a build may memo its own inputs (labels build on edges).
+# Holding it across a build makes a concurrent first call wait and hit
+# instead of building the same intermediate twice.
+_MEMO_LOCK = threading.RLock()
+
+
+def memo(spark, kind: str, sf_dir: str, *extra, build):
+    """The session memo: ``build()``'s result, computed once per
+    ``(kind, sf_dir, sf_fingerprint(sf_dir), *extra)`` and reused by every
+    later call on the same ``spark``.
+
+    It holds compute-once intermediates that several queries share (shingle
+    postings, pair stats, Jaccard edges, component labels, exact pairs, BM25
+    stats, ANN top-k, the PQ quantizer); ``build`` does its own
+    ``localCheckpoint``. The table is an attribute of the session object, so
+    it lives and dies with the session and a new session never sees an old
+    one's entries."""
+    key = (kind, sf_dir, sf_fingerprint(sf_dir), *extra)
+    with _MEMO_LOCK:
+        table = spark.__dict__.setdefault(_MEMO_ATTR, {})
+        if key not in table:
+            table[key] = build()
+        return table[key]
+
+
+def clear(spark) -> None:
+    """Drop every memo entry of ``spark``; the next :func:`memo` call rebuilds."""
+    with _MEMO_LOCK:
+        spark.__dict__.pop(_MEMO_ATTR, None)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -13,21 +13,26 @@ this helper centralizes the three cost levers:
   every micro-batch pays checkpoint I/O per partition — so the session's
   batch-tuned setting (32) is dropped to 4 for the drain's lifetime. On a
   real cluster this knob is sized to executor count instead.
-- One shared checkpoint scratch root per process (one mkdtemp, one subdir
-  per query) instead of a fresh mkdtemp per call.
+- Scratch on tmpfs: the drain checkpoints, the maintained families'
+  checkpoints and state stores and the events stream dir are all
+  :func:`scratch_dir` entries under one per-process root, which an
+  ``atexit`` handler removes when the process exits.
 """
 
 from __future__ import annotations
 
+import atexit
 import contextlib
 import os
+import shutil
 import tempfile
 import threading
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-_CKPT_ROOT: list[str] = []
+_ROOT: list[str] = []
+_ROOT_LOCK = threading.Lock()
 
 DRAIN_SHUFFLE_PARTITIONS = "4"
 
@@ -83,24 +88,23 @@ def _scratch_base() -> str:
     return "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
 
 
-def _checkpoint_dir(name: str) -> str:
-    if not _CKPT_ROOT:
-        _CKPT_ROOT.append(tempfile.mkdtemp(prefix="k2d_ckpts_", dir=_scratch_base()))
-    d = os.path.join(_CKPT_ROOT[0], name)
-    os.makedirs(d, exist_ok=True)
-    return d
+def scratch_dir(prefix: str | None = None) -> str:
+    """A fresh directory ``<root>/<prefix>XXXXXXXX``, or with no prefix the
+    root itself: this process's one scratch root under :func:`_scratch_base`,
+    created on first use and removed by an ``atexit`` handler.
 
-
-def scratch_state_dir(prefix: str) -> str:
-    """Scratch root for the maintained-family ParquetStateStores — the
-    per-micro-batch snapshot read/overwrite cycle is the same
-    consumed-in-process scratch I/O as the drain checkpoints, so it gets
-    the same tmpfs placement (guide §6: the default ``/tmp`` here is
-    disk-backed, and every trigger paid a real parquet write + fsync to
-    it for state that is discarded when the query returns). Durable
-    deployments pass their own store paths on real storage; K2D_CKPT_DIR
-    overrides exactly as for checkpoints."""
-    return tempfile.mkdtemp(prefix=prefix, dir=_scratch_base())
+    Drain checkpoints, the maintained families' checkpoints and
+    ParquetStateStores and the events stream dir all live here: their
+    per-micro-batch I/O is consumed in-process and discarded when the
+    query returns, so it gets tmpfs placement and is never left behind.
+    Durable deployments pass their own paths on real storage."""
+    with _ROOT_LOCK:
+        if not _ROOT:
+            _ROOT.append(tempfile.mkdtemp(prefix="k2d_ckpts_", dir=_scratch_base()))
+            atexit.register(shutil.rmtree, _ROOT[0], ignore_errors=True)
+    if prefix is None:
+        return _ROOT[0]
+    return tempfile.mkdtemp(prefix=prefix, dir=_ROOT[0])
 
 
 def drain_to_memory(
@@ -160,7 +164,7 @@ def drain_to_memory(
     16 partitions — partition sweep 8/16/24 confirms 16 optimal), qx46
     +1.8 s and qx31 +1.2 s (2-batch ledger maintenance, load-bearing),
     q58/qx08 +1.3 s each (4 state stores per partition; sweep confirms
-    2 partitions optimal). Checkpoints live on tmpfs (_scratch_base);
+    2 partitions optimal). Checkpoints live on tmpfs (scratch_dir);
     at real scale the same queries amortize the per-trigger cost over
     GB-sized batches."""
     spark = df.sparkSession
@@ -177,7 +181,7 @@ def drain_to_memory(
                 .format("memory")
                 .queryName(name)
                 .trigger(availableNow=True)
-                .option("checkpointLocation", _checkpoint_dir(name))
+                .option("checkpointLocation", scratch_dir(f"{name}_"))
                 .start()
             )
             try:

@@ -32,8 +32,6 @@ transaction, replay detected by version comparison.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
@@ -41,7 +39,7 @@ from pyspark.sql.window import Window as W
 from kafka2delta_spark.queryset import register
 from kafka2delta_spark.functions.measure import v1000 as v1000_m
 from kafka2delta_spark.state.store import ParquetStateStore
-from kafka2delta_spark.streaming.drain import scratch_state_dir
+from kafka2delta_spark.streaming.drain import drain_shuffle_partitions, scratch_dir
 
 
 def _partial(batch_df: DataFrame) -> DataFrame:
@@ -106,11 +104,7 @@ def maintain_user_rollup(
         apply_rollup_batch(store, batch_df, batch_id)
 
     if checkpoint is None:
-        from kafka2delta_spark.streaming.drain import _checkpoint_dir
-
-        checkpoint = tempfile.mkdtemp(
-            prefix="rollup_ckpt_", dir=_checkpoint_dir("rollup")
-        )
+        checkpoint = scratch_dir("rollup_ckpt_")
     return (
         source_df.writeStream.foreachBatch(merge_batch)
         .option("checkpointLocation", checkpoint)
@@ -155,15 +149,11 @@ def q49_incremental_user_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # NULL != sentinel evaluating to NULL
         .filter(F.col("user_id").isNotNull() & (F.col("user_id") != SENTINEL_USER))
     )
-    store = ParquetStateStore(
-        spark, scratch_state_dir("rollup_state_") + "/state"
-    )
+    store = ParquetStateStore(spark, scratch_dir("rollup_state_") + "/state")
     # same knob as drain_to_memory: every micro-batch re-plans its
     # aggregation with the session's shuffle partitions and pays fixed
     # cost per partition, so drop to the drain default for the run —
     # through the one shared (guarded) context manager in drain.py
-    from kafka2delta_spark.streaming.drain import drain_shuffle_partitions
-
     with drain_shuffle_partitions(spark):
         q = maintain_user_rollup(spark, stream, store)
         q.awaitTermination()
@@ -235,7 +225,7 @@ def qx13_store_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     mid = int(m_val)
     store = ParquetStateStore(
-        spark, scratch_state_dir("cdf_state_") + "/state",
+        spark, scratch_dir("cdf_state_") + "/state",
         retain_versions=2,
     )
     apply_rollup_batch(store, ev.filter(F.unix_micros("ts") < mid), 0)
@@ -305,17 +295,12 @@ def qx23_streaming_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(d)
         .filter(F.col("user_id") != SENTINEL_USER)
     )
-    store = ParquetStateStore(
-        spark, scratch_state_dir("kmv_state_") + "/state"
-    )
-    from kafka2delta_spark.streaming.drain import drain_shuffle_partitions
+    store = ParquetStateStore(spark, scratch_dir("kmv_state_") + "/state")
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         apply_kmv_batch(store, batch_df, batch_id)
 
-    from kafka2delta_spark.streaming.drain import _checkpoint_dir
-
-    checkpoint = tempfile.mkdtemp(prefix="kmv_ckpt_", dir=_checkpoint_dir("kmv"))
+    checkpoint = scratch_dir("kmv_ckpt_")
     with drain_shuffle_partitions(spark):
         q = (
             stream.writeStream.foreachBatch(merge_batch)
@@ -374,10 +359,6 @@ def qx31_streaming_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     key cardinality, the state shape a 100 TB stream can afford."""
     from kafka2delta_spark.operators.advanced import countmin_report
     from kafka2delta_spark.sources.tables import load_table
-    from kafka2delta_spark.streaming.drain import (
-        _checkpoint_dir,
-        drain_shuffle_partitions,
-    )
     from kafka2delta_spark.streaming.stateful import (
         SENTINEL_USER,
         SPLIT_SHARDS,
@@ -392,14 +373,12 @@ def qx31_streaming_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(d)
         .filter(F.col("user_id") != SENTINEL_USER)
     )
-    store = ParquetStateStore(
-        spark, scratch_state_dir("cm_state_") + "/state"
-    )
+    store = ParquetStateStore(spark, scratch_dir("cm_state_") + "/state")
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         apply_countmin_batch(store, batch_df, batch_id)
 
-    checkpoint = tempfile.mkdtemp(prefix="cm_ckpt_", dir=_checkpoint_dir("cm"))
+    checkpoint = scratch_dir("cm_ckpt_")
     with drain_shuffle_partitions(spark):
         q = (
             stream.writeStream.foreachBatch(merge_batch)
@@ -521,10 +500,6 @@ def qx46_streaming_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch query; the tail read-modify-write is store-sized (users x
     ANOM_WINDOW rows), not history-sized."""
     from kafka2delta_spark.sources.tables import load_table
-    from kafka2delta_spark.streaming.drain import (
-        _checkpoint_dir,
-        drain_shuffle_partitions,
-    )
     from kafka2delta_spark.streaming.stateful import (
         SENTINEL_USER,
         SPLIT_SHARDS,
@@ -542,14 +517,12 @@ def qx46_streaming_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
         # also makes the sentinel exclusion explicit
         .filter(F.col("user_id").isNotNull() & (F.col("user_id") != SENTINEL_USER))
     )
-    store = ParquetStateStore(
-        spark, scratch_state_dir("anom_state_") + "/state"
-    )
+    store = ParquetStateStore(spark, scratch_dir("anom_state_") + "/state")
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         apply_anomaly_batch(store, batch_df, batch_id)
 
-    checkpoint = tempfile.mkdtemp(prefix="anom_ckpt_", dir=_checkpoint_dir("anom"))
+    checkpoint = scratch_dir("anom_ckpt_")
     with drain_shuffle_partitions(spark):
         q = (
             stream.writeStream.foreachBatch(merge_batch)
@@ -773,10 +746,6 @@ def qx70_streaming_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     rolling tails)."""
     from kafka2delta_spark.operators.advanced import cusum_from_daily
     from kafka2delta_spark.sources.tables import load_table
-    from kafka2delta_spark.streaming.drain import (
-        _checkpoint_dir,
-        drain_shuffle_partitions,
-    )
     from kafka2delta_spark.streaming.stateful import (
         SENTINEL_USER,
         SPLIT_SHARDS,
@@ -794,16 +763,12 @@ def qx70_streaming_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
         # != would silently drop NULL keys and undercount)
         .filter(~F.col("user_id").eqNullSafe(SENTINEL_USER))
     )
-    store = ParquetStateStore(
-        spark, scratch_state_dir("cusum_state_") + "/state"
-    )
+    store = ParquetStateStore(spark, scratch_dir("cusum_state_") + "/state")
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         apply_daily_count_batch(store, batch_df, batch_id)
 
-    checkpoint = tempfile.mkdtemp(
-        prefix="cusum_ckpt_", dir=_checkpoint_dir("cusum")
-    )
+    checkpoint = scratch_dir("cusum_ckpt_")
     with drain_shuffle_partitions(spark):
         q = (
             stream.writeStream.foreachBatch(merge_batch)
@@ -880,10 +845,6 @@ def qx92_streaming_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     is load-bearing."""
     from kafka2delta_spark.operators.analytic import retention_matrix
     from kafka2delta_spark.sources.tables import load_table
-    from kafka2delta_spark.streaming.drain import (
-        _checkpoint_dir,
-        drain_shuffle_partitions,
-    )
     from kafka2delta_spark.streaming.stateful import (
         SENTINEL_USER,
         SPLIT_SHARDS,
@@ -901,16 +862,12 @@ def qx92_streaming_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
         # also makes the sentinel exclusion explicit
         .filter(F.col("user_id").isNotNull() & (F.col("user_id") != SENTINEL_USER))
     )
-    store = ParquetStateStore(
-        spark, scratch_state_dir("ret_state_") + "/state"
-    )
+    store = ParquetStateStore(spark, scratch_dir("ret_state_") + "/state")
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         apply_presence_batch(store, batch_df, batch_id)
 
-    checkpoint = tempfile.mkdtemp(
-        prefix="ret_ckpt_", dir=_checkpoint_dir("ret")
-    )
+    checkpoint = scratch_dir("ret_ckpt_")
     with drain_shuffle_partitions(spark):
         q = (
             stream.writeStream.foreachBatch(merge_batch)
@@ -994,10 +951,6 @@ def qx99_streaming_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
         concurrency_from_intervals,
     )
     from kafka2delta_spark.sources.tables import load_table
-    from kafka2delta_spark.streaming.drain import (
-        _checkpoint_dir,
-        drain_shuffle_partitions,
-    )
     from kafka2delta_spark.streaming.stateful import (
         SENTINEL_USER,
         SPLIT_SHARDS,
@@ -1015,16 +968,12 @@ def qx99_streaming_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
         # also makes the sentinel exclusion explicit
         .filter(F.col("user_id").isNotNull() & (F.col("user_id") != SENTINEL_USER))
     )
-    store = ParquetStateStore(
-        spark, scratch_state_dir("conc_state_") + "/state"
-    )
+    store = ParquetStateStore(spark, scratch_dir("conc_state_") + "/state")
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         apply_session_interval_batch(store, batch_df, batch_id)
 
-    checkpoint = tempfile.mkdtemp(
-        prefix="conc_ckpt_", dir=_checkpoint_dir("conc")
-    )
+    checkpoint = scratch_dir("conc_ckpt_")
     with drain_shuffle_partitions(spark):
         q = (
             stream.writeStream.foreachBatch(merge_batch)
@@ -1202,10 +1151,6 @@ def qy10_streaming_interarrival(spark: SparkSession, sf_dir: str) -> DataFrame:
     load-bearing), cell extremes and last-seen are idempotent merges
     (replay-harmless on their own)."""
     from kafka2delta_spark.sources.tables import load_table
-    from kafka2delta_spark.streaming.drain import (
-        _checkpoint_dir,
-        drain_shuffle_partitions,
-    )
     from kafka2delta_spark.streaming.stateful import (
         SENTINEL_USER,
         SPLIT_SHARDS,
@@ -1223,16 +1168,12 @@ def qy10_streaming_interarrival(spark: SparkSession, sf_dir: str) -> DataFrame:
         # also makes the sentinel exclusion explicit
         .filter(F.col("user_id").isNotNull() & (F.col("user_id") != SENTINEL_USER))
     )
-    store = ParquetStateStore(
-        spark, scratch_state_dir("gap_state_") + "/state"
-    )
+    store = ParquetStateStore(spark, scratch_dir("gap_state_") + "/state")
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         apply_interarrival_batch(store, batch_df, batch_id)
 
-    checkpoint = tempfile.mkdtemp(
-        prefix="gap_ckpt_", dir=_checkpoint_dir("gap")
-    )
+    checkpoint = scratch_dir("gap_ckpt_")
     with drain_shuffle_partitions(spark):
         q = (
             stream.writeStream.foreachBatch(merge_batch)

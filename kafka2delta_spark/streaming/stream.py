@@ -42,21 +42,12 @@ from kafka2delta_spark.cdc.merge import (
 from kafka2delta_spark.cdc.registry import SchemaRegistry, column_names_from_schema_str
 from kafka2delta_spark.cdc.wire import parse_confluent_envelope
 from kafka2delta_spark.config import DELETED_COL, LSN_COL, TableConfig
+from kafka2delta_spark.session import delta_available
 from kafka2delta_spark.state.store import DeltaStateStore, ParquetStateStore
 
 DEFAULT_AVRO_OPTIONS = {"mode": "FAILFAST"}  # ref stream/stream.py:36-37
 
 logger = logging.getLogger(__name__)
-
-
-def delta_available() -> bool:
-    """True when delta-spark is importable (jar + python pkg present)."""
-    try:
-        import delta  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
 
 
 def make_state_store(

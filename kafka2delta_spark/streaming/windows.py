@@ -15,14 +15,16 @@ Spark's native session merge (state-store backed when streaming).
 
 from __future__ import annotations
 
-import tempfile
+import contextlib
+import hashlib
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka2delta_spark.queryset import register
 from kafka2delta_spark.sources.tables import load_table, normalize_event_ts
-from kafka2delta_spark.streaming.drain import drain_to_memory
+from kafka2delta_spark.streaming.drain import drain_to_memory, scratch_dir
 
 
 @register(
@@ -109,22 +111,18 @@ def q52_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_STREAM_DIRS: dict[str, str] = {}
-
-
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Open the events table as a real file-source stream (Kafka stand-in;
     same schema juggling as the batch loader for the nanos timestamp).
     The file source wants a directory — symlink the single parquet file
-    into a scratch dir (testdata is read-only)."""
-    import os
-
-    if sf_dir not in _STREAM_DIRS:
-        d = tempfile.mkdtemp(prefix="events_stream_")
+    into a scratch dir named after ``sf_dir`` (testdata is read-only)."""
+    tag = hashlib.sha1(sf_dir.encode()).hexdigest()[:12]
+    d = os.path.join(scratch_dir(), f"events_stream_{tag}")
+    os.makedirs(d, exist_ok=True)
+    with contextlib.suppress(FileExistsError):
         os.symlink(f"{sf_dir}/events.parquet", f"{d}/events.parquet")
-        _STREAM_DIRS[sf_dir] = d
     batch = spark.read.parquet(f"{sf_dir}/events.parquet")
-    stream = spark.readStream.schema(batch.schema).parquet(_STREAM_DIRS[sf_dir])
+    stream = spark.readStream.schema(batch.schema).parquet(d)
     return normalize_event_ts(stream)
 
 

@@ -3,6 +3,10 @@ import os
 import pytest
 
 os.environ.setdefault("SPARK_GRAFT_CPUS", "8")  # keep test JVM small
+# The session default heap (16g) can exceed a small host's RAM; the suite's
+# live set is far smaller, and an unbounded heap lets the JVM grow until the
+# host kills it mid-suite.
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "8g")
 
 
 @pytest.fixture(scope="session")

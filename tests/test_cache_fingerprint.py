@@ -1,15 +1,18 @@
-"""Session caches must not serve stale checkpoints when files under the
-cached sf_dir change mid-session: the compute-once materializations
+"""Session memos must not serve stale checkpoints when files under the
+memoized sf_dir change mid-session: the compute-once materializations
 (pair stats / edge lists / PQ quantizer) key on a content fingerprint
-(name, size, mtime_ns per parquet file) in addition to (session, path).
+(name, size, mtime_ns per parquet file) in addition to the path, in a
+table owned by the session object.
 
 VERDICT r06 item 8: the scale-stress tests write scaled copies to NEW
 dirs today, so the staleness was latent — this pins the guard directly.
 """
 
+import gc
 import shutil
+import weakref
 
-from kafka2delta_spark.sources.tables import sf_fingerprint
+from kafka2delta_spark.sources.tables import clear, memo, sf_fingerprint
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -36,6 +39,47 @@ def test_fingerprint_changes_on_rewrite(tmp_path):
 
 def test_fingerprint_missing_dir_is_empty():
     assert sf_fingerprint("/nonexistent/path") == ()
+
+
+class _Session:
+    """Plain stand-in for a SparkSession: the memo needs only an object."""
+
+
+class _Built:
+    pass
+
+
+def test_memo_builds_once_per_session_until_cleared():
+    builds = []
+
+    def build():
+        builds.append(1)
+        return _Built()
+
+    s1, s2 = _Session(), _Session()
+    first = memo(s1, "kind", "/no/such/dir", 3, build=build)
+    assert memo(s1, "kind", "/no/such/dir", 3, build=build) is first
+    assert len(builds) == 1, "second call on the same session must hit"
+
+    other = memo(s2, "kind", "/no/such/dir", 3, build=build)
+    assert other is not first and len(builds) == 2, "each session builds its own"
+
+    assert memo(s1, "kind", "/no/such/dir", 4, build=build) is not first
+    assert len(builds) == 3, "a different extra key part is a different entry"
+
+    clear(s1)
+    assert memo(s1, "kind", "/no/such/dir", 3, build=build) is not first
+    assert len(builds) == 4, "clear forces a rebuild"
+    assert memo(s2, "kind", "/no/such/dir", 3, build=build) is other
+
+
+def test_memo_table_dies_with_its_session():
+    s = _Session()
+    value = weakref.ref(memo(s, "kind", "/no/such/dir", build=_Built))
+    assert value() is not None
+    del s
+    gc.collect()
+    assert value() is None, "memo entry outlived its session"
 
 
 def test_pair_stats_cache_invalidates_on_mutation(spark, tmp_path):

@@ -17,9 +17,9 @@ from kafka2delta_spark.cdc.avro_codec import encode_avro_payload
 from kafka2delta_spark.cdc.registry import InMemorySchemaRegistry
 from kafka2delta_spark.cdc.wire import make_confluent_envelope
 from kafka2delta_spark.config import TableConfig
+from kafka2delta_spark.session import delta_available
 from kafka2delta_spark.streaming.stream import (
     apply_cdc_micro_batch,
-    delta_available,
     make_state_store,
 )
 

@@ -1,8 +1,8 @@
 """Concurrent batch-query submission on one SparkSession.
 
 Spark's FAIR/FIFO scheduler handles concurrent jobs from threads; what
-this guards is OUR layer — the query registry, the session-scoped
-checkpoint caches (_jaccard_edges / _PAIR_STATS_CACHE), and the absence
+this guards is OUR layer — the query registry, the session memos
+(``sources.tables.memo``: pair stats, Jaccard edges), and the absence
 of hidden session-conf mutation in batch paths (the streaming drain DOES
 mutate conf, which is why it takes a lock and is excluded here: its
 guard raising on concurrent entry is covered by

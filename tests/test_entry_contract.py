@@ -32,7 +32,7 @@ def test_gate_block_is_exactly_the_first_fifty():
 
 def test_every_alias_key_matches_exactly_one_registry_query():
     load_all_querysets()
-    for key in entry._A9_KEYS:
+    for key in entry._A12_KEYS:
         names = [n for n in QUERIES if n.split("_")[0] == key]
         assert len(names) == 1, f"gate key {key} matches {names}"
 

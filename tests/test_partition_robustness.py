@@ -46,7 +46,7 @@ def baseline(spark):
 
 def test_results_stable_under_tiny_splits_and_high_fanout(spark, baseline):
     from kafka2delta_spark.queryset import QUERIES
-    from kafka2delta_spark.functions import dedup
+    from kafka2delta_spark.sources.tables import clear
 
     saved = {
         "spark.sql.files.maxPartitionBytes": spark.conf.get(
@@ -56,10 +56,10 @@ def test_results_stable_under_tiny_splits_and_high_fanout(spark, baseline):
             "spark.sql.shuffle.partitions"
         ),
     }
-    # the pair-stats/edge caches were materialized under the old layout;
-    # clear them so the stressed layout actually re-derives the pipeline
-    dedup._PAIR_STATS_CACHE.clear()
-    dedup._EDGE_CACHE.clear()
+    # the session memos (shingle rows, pair stats, edges) were materialized
+    # under the old layout; clear them so the stressed layout actually
+    # re-derives the whole pipeline, shingle explode/distinct included
+    clear(spark)
     spark.conf.set("spark.sql.files.maxPartitionBytes", str(64 * 1024))
     spark.conf.set("spark.sql.shuffle.partitions", "64")
     try:
@@ -69,5 +69,4 @@ def test_results_stable_under_tiny_splits_and_high_fanout(spark, baseline):
     finally:
         for k, v in saved.items():
             spark.conf.set(k, v)
-        dedup._PAIR_STATS_CACHE.clear()
-        dedup._EDGE_CACHE.clear()
+        clear(spark)

@@ -48,7 +48,7 @@ def test_weighted_sample_is_layout_independent(spark, sf_dir, tmp_path):
         assert len(rks) <= SAMPLE_K
 
 
-def test_weighted_sample_favors_heavy_docs(spark):
+def test_weighted_sample_favors_heavy_docs(spark, tmp_path):
     """With one doc 1000x the weight of 499 others, Efraimidis-Spirakis
     keeps it with priority u^(1/w) -> ~1: it must appear in the sample."""
     heavy_rows = [(0, "xx", "en", "s", 1_000_000)] + [
@@ -57,11 +57,8 @@ def test_weighted_sample_favors_heavy_docs(spark):
     df = spark.createDataFrame(
         heavy_rows, "doc_id long, text string, lang string, source string, n_chars long"
     )
-    import os
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix="ws_heavy_")
-    df.write.mode("overwrite").parquet(os.path.join(d, "documents.parquet"))
+    d = str(tmp_path)
+    df.write.mode("overwrite").parquet(f"{d}/documents.parquet")
     out = qx02_weighted_sample(spark, d).collect()
     assert 0 in {r["doc_id"] for r in out}
 

@@ -15,7 +15,6 @@ HDFS provider's .delta files).
 from __future__ import annotations
 
 import os
-import tempfile
 
 from tests.conftest import SF_DIR
 
@@ -25,7 +24,7 @@ ROCKSDB_PROVIDER = (
 PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
 
 
-def test_streaming_agg_on_rocksdb_provider(spark):
+def test_streaming_agg_on_rocksdb_provider(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from kafka2delta_spark.sources.tables import load_table
@@ -38,16 +37,17 @@ def test_streaming_agg_on_rocksdb_provider(spark):
         .collect()
     }
 
-    src = tempfile.mkdtemp(prefix="rocksdb_src_")
-    os.symlink(f"{SF_DIR}/events.parquet", f"{src}/events.parquet")
-    ckpt = tempfile.mkdtemp(prefix="rocksdb_ckpt_")
+    src = tmp_path / "src"
+    src.mkdir()
+    os.symlink(f"{SF_DIR}/events.parquet", src / "events.parquet")
+    ckpt = str(tmp_path / "ckpt")
 
     prev = spark.conf.get(PROVIDER_CONF, None)
     spark.conf.set(PROVIDER_CONF, ROCKSDB_PROVIDER)
     try:
         agg = (
             spark.readStream.schema(ev_batch.schema)
-            .parquet(src)
+            .parquet(str(src))
             .groupBy("event_type")
             .agg(F.count(F.lit(1)).alias("n"))
         )
@@ -135,9 +135,8 @@ def test_family_query_same_hash_on_both_providers(spark, qname):
     from kafka2delta_spark.streaming import drain
 
     default_rows = _run_query(spark, qname)
-    before = set()
-    if drain._CKPT_ROOT:
-        before = set(os.listdir(drain._CKPT_ROOT[0]))
+    root = drain.scratch_dir()
+    before = set(os.listdir(root))
     rocksdb_rows = _run_query(spark, qname, provider=ROCKSDB_PROVIDER)
     assert rocksdb_rows == default_rows, (
         f"{qname}: RocksDB-provider result diverged from default provider"
@@ -148,7 +147,6 @@ def test_family_query_same_hash_on_both_providers(spark, qname):
         # Prove the provider actually engaged for the stateful exchange:
         # the drain checkpoint created during the RocksDB run must contain
         # RocksDB artifacts (.zip/.changelog), never HDFS .delta files.
-        root = drain._CKPT_ROOT[0]
         new_dirs = set(os.listdir(root)) - before
         assert new_dirs, "no new drain checkpoint created for the RocksDB run"
         state_files = []

@@ -77,7 +77,7 @@ def test_halves_partition_events_at_the_midpoint(spark, split_dir):
     assert sentinels[0]["ts"] > max_real
 
 
-def test_drain_sees_exactly_two_data_batches(spark, split_dir):
+def test_drain_sees_exactly_two_data_batches(spark, split_dir, tmp_path):
     """A foreachBatch drain over the split with the scaffold's trigger
     size observes exactly 2 non-empty micro-batches, in half order."""
     from pyspark.sql import functions as F
@@ -107,7 +107,7 @@ def test_drain_sees_exactly_two_data_batches(spark, split_dir):
         .trigger(availableNow=True)
         # fresh checkpoint each run — a reused one would mark the files
         # consumed and the re-run would observe zero batches
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_shape_"))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
         .start()
     )
     q.awaitTermination()
