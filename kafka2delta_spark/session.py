@@ -43,6 +43,17 @@ def local_rows(spark: SparkSession, data, schema):
     return spark.createDataFrame(spark.sparkContext.parallelize(data, 1), schema)
 
 
+def _default_driver_memory() -> str:
+    """Half the host's physical memory, at most 16g: the JVM grows its
+    heap toward this bound, so a bound above the host's RAM lets the
+    kernel kill the driver long before the heap is actually full."""
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, OSError, ValueError):  # no sysconf (non-POSIX)
+        return "16g"
+    return f"{min(phys // 2 >> 20, 16 << 10)}m"
+
+
 def build_session(
     app_name: str = "kafka2delta_spark",
     master: str | None = None,
@@ -69,7 +80,10 @@ def build_session(
         # parquet reader rejects; read as long and convert in the loader.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
     )
     # Streaming state-store backend. Default = HDFS-backed (in-heap); set
     # SPARK_GRAFT_STATE_STORE=rocksdb for the RocksDB provider (OSS Spark

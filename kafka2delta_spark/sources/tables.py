@@ -70,8 +70,10 @@ _MEMO_LOCK = threading.RLock()
 
 def memo(spark, kind: str, sf_dir: str, *extra, build):
     """The session memo: ``build()``'s result, computed once per
-    ``(kind, sf_dir, sf_fingerprint(sf_dir), *extra)`` and reused by every
-    later call on the same ``spark``.
+    ``(kind, sf_dir, *extra)`` and reused by every later call on the same
+    ``spark`` while ``sf_fingerprint(sf_dir)`` is unchanged. A changed
+    fingerprint rebuilds and REPLACES the entry, so a rewritten directory
+    never leaves its superseded value (and its checkpoint blocks) behind.
 
     It holds compute-once intermediates that several queries share (shingle
     postings, pair stats, Jaccard edges, component labels, exact pairs, BM25
@@ -79,12 +81,14 @@ def memo(spark, kind: str, sf_dir: str, *extra, build):
     ``localCheckpoint``. The table is an attribute of the session object, so
     it lives and dies with the session and a new session never sees an old
     one's entries."""
-    key = (kind, sf_dir, sf_fingerprint(sf_dir), *extra)
+    key = (kind, sf_dir, *extra)
+    fp = sf_fingerprint(sf_dir)
     with _MEMO_LOCK:
         table = spark.__dict__.setdefault(_MEMO_ATTR, {})
-        if key not in table:
-            table[key] = build()
-        return table[key]
+        hit = table.get(key)
+        if hit is None or hit[0] != fp:
+            hit = table[key] = (fp, build())
+        return hit[1]
 
 
 def clear(spark) -> None:

@@ -1,13 +1,25 @@
-"""Incremental view maintenance: additive aggregates via foreachBatch merge.
+"""Incremental view maintenance: eight maintained-aggregate families as
+pure folds under one replay ledger and one foreachBatch runner.
 
 The third leg of the stateful-streaming surface, next to q57's
 ``applyInPandasWithState`` and lifetime.py's env-gated
 ``transformWithStateInPandas``: maintain a per-key aggregate TABLE (not
-in-memory operator state) by folding each micro-batch's partial aggregate
-into the state store — the ``foreachBatch`` + MERGE pattern every
-Delta-based pipeline uses for continuously-maintained rollups, and the
-same shape as the reference's CDC merge loop (ref stream/stream.py:114-148)
-with additive semantics instead of latest-LSN-wins.
+in-memory operator state) by folding each micro-batch into the state
+store — the ``foreachBatch`` + MERGE pattern every Delta-based pipeline
+uses for continuously-maintained rollups, and the same shape as the
+reference's CDC merge loop (ref stream/stream.py:39-156) with fold
+semantics instead of latest-LSN-wins. Each concern is written once:
+
+* a **fold** ``(prior | None, batch) -> DataFrame`` per family, pure and
+  I/O-free: additive rollup (q49), KMV sketch union (qx23), count-min
+  cells (qx31), rolling anomaly tails (qx46), daily counts (qx70),
+  presence sets (qx92), session intervals (qx99) and inter-arrival
+  histograms (qy10). ``prior`` is None on the first batch, so no fold
+  unions with an empty-state scaffold;
+* :func:`apply_batch`, the replay ledger around any fold;
+* :func:`maintain`, the one ``foreachBatch`` + ``availableNow`` query;
+* :func:`_drain_family`, which drives a fold over the two-batch events
+  split and hands the final snapshot to the query's read-time tail.
 
 Why this scales where complete-mode output (q54) does not: complete mode
 re-emits the ENTIRE result every trigger, so sink I/O is O(total keys) per
@@ -21,16 +33,20 @@ executor memory holds nothing between triggers.
 Exactly-once: foreachBatch is at-least-once on retry, and additive
 aggregates — unlike the CDC path, whose LSN guard makes replay a no-op —
 have no natural guard: re-folding a replayed batch double-counts it. So
-``merge_batch`` records the applied ``batch_id`` in the SAME commit as the
-snapshot (``ParquetStateStore.overwrite(metadata=...)`` — the ledger flips
-atomically with the version pointer) and skips any batch with
-``batch_id <= last_applied_batch_id``. On Delta the identical pattern is
-the writer's ``txnAppId``/``txnVersion`` options (or reading
-``DeltaTable.history`` for the last txn version): ledger and data in one
-transaction, replay detected by version comparison.
+:func:`apply_batch` records the applied ``batch_id`` in the SAME commit as
+the snapshot (``ParquetStateStore.overwrite(metadata=...)`` — the ledger
+flips atomically with the version pointer) and skips any batch with
+``batch_id <= last_applied_batch_id``. Each fold notes whether the ledger
+is load-bearing for it (additive state) or only skips wasted work
+(idempotent state). On Delta the identical pattern is the writer's
+``txnAppId``/``txnVersion`` options (or reading ``DeltaTable.history``
+for the last txn version): ledger and data in one transaction, replay
+detected by version comparison.
 """
 
 from __future__ import annotations
+
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -40,6 +56,84 @@ from kafka2delta_spark.queryset import register
 from kafka2delta_spark.functions.measure import v1000 as v1000_m
 from kafka2delta_spark.state.store import ParquetStateStore
 from kafka2delta_spark.streaming.drain import drain_shuffle_partitions, scratch_dir
+
+Fold = Callable[[DataFrame | None, DataFrame], DataFrame]
+
+
+def apply_batch(
+    store: ParquetStateStore, batch_df: DataFrame, batch_id: int, fold: Fold
+) -> bool:
+    """Fold one micro-batch into ``store``; replay-idempotent. Returns
+    False (no-op) when ``batch_id`` was already applied — foreachBatch is
+    at-least-once, so a retry after the commit landed, or a restart
+    replaying the last batch not yet recorded in the checkpoint, delivers
+    the same batch again. The ledger (``last_applied_batch_id``) commits
+    atomically with the snapshot, so the check and the data can't
+    diverge."""
+    if batch_id <= store.metadata().get("last_applied_batch_id", -1):
+        return False  # replayed batch: already folded into the snapshot
+    store.overwrite(
+        fold(store.read(), batch_df),
+        metadata={"last_applied_batch_id": batch_id},
+    )
+    return True
+
+
+def maintain(
+    source_df: DataFrame,
+    store: ParquetStateStore,
+    fold: Fold,
+    checkpoint: str | None = None,
+):
+    """Start the maintenance query: every micro-batch of ``source_df``
+    goes through :func:`apply_batch` with ``fold``. Returns the
+    StreamingQuery (caller awaits). Without an explicit ``checkpoint``
+    (a durable deployment would pass one on real storage), a scratch dir
+    on the drain's tmpfs root is used."""
+    if checkpoint is None:
+        checkpoint = scratch_dir("maintain_ckpt_")
+    return (
+        source_df.writeStream.foreachBatch(
+            lambda batch_df, batch_id: apply_batch(store, batch_df, batch_id, fold)
+        )
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def _drain_family(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    fold: Fold,
+    keep_null_users: bool = False,
+) -> DataFrame:
+    """Maintain ``fold`` over the two-batch events split (one micro-batch
+    per time-ordered half, sentinel riding in the second) into a scratch
+    store and return its final snapshot.
+
+    Sentinel filter: per-user state cannot address a NULL key, so by
+    default only defined users are kept (``isNotNull`` also makes the
+    sentinel exclusion explicit). ``keep_null_users`` is for keys that are
+    not the user: anonymous events count, and the sentinel is excluded
+    null-safely (a plain ``!=`` would drop NULL users and undercount).
+
+    Every micro-batch re-plans its fold with the session's shuffle
+    partitions and pays fixed cost per partition, so the drain runs under
+    the shared :func:`drain_shuffle_partitions` override."""
+    from kafka2delta_spark.streaming.stateful import SENTINEL_USER, _open_stream
+
+    user = F.col("user_id")
+    stream = _open_stream(spark, sf_dir).filter(
+        ~user.eqNullSafe(SENTINEL_USER)
+        if keep_null_users
+        else user.isNotNull() & (user != SENTINEL_USER)
+    )
+    store = ParquetStateStore(spark, scratch_dir(f"{name}_state_") + "/state")
+    with drain_shuffle_partitions(spark):
+        maintain(stream, store, fold, scratch_dir(f"{name}_ckpt_")).awaitTermination()
+    return store.read()
 
 
 def _partial(batch_df: DataFrame) -> DataFrame:
@@ -66,51 +160,11 @@ def _combine(prior: DataFrame, partial: DataFrame) -> DataFrame:
     )
 
 
-def apply_rollup_batch(
-    store: ParquetStateStore, batch_df: DataFrame, batch_id: int
-) -> bool:
-    """Fold one micro-batch's partial aggregate into ``store``;
-    replay-idempotent. Returns False (no-op) when ``batch_id`` was already
-    applied — foreachBatch is at-least-once, so a retry after the commit
-    landed, or a restart replaying the last batch not yet recorded in the
-    checkpoint, delivers the same batch again. The ledger
-    (``last_applied_batch_id``) commits atomically with the snapshot, so
-    the check and the data can't diverge."""
-    last = store.metadata().get("last_applied_batch_id", -1)
-    if batch_id <= last:
-        return False  # replayed batch: already folded into the snapshot
+def rollup_fold(prior: DataFrame | None, batch_df: DataFrame) -> DataFrame:
+    """Per-user (n_events, v1000, last_seen_us). Additive: a replayed
+    batch would double-count, so the ledger is load-bearing."""
     partial = _partial(batch_df)
-    prior = store.read() if store.exists() else None
-    store.overwrite(
-        partial if prior is None else _combine(prior, partial),
-        metadata={"last_applied_batch_id": batch_id},
-    )
-    return True
-
-
-def maintain_user_rollup(
-    spark: SparkSession,
-    source_df: DataFrame,
-    store: ParquetStateStore,
-    checkpoint: str | None = None,
-):
-    """Start the maintenance query: each micro-batch folds its partial
-    aggregate into ``store`` via :func:`apply_rollup_batch`. Returns the
-    StreamingQuery (caller awaits). Without an explicit ``checkpoint``
-    (a durable deployment would pass one on real storage), a scratch dir
-    on the drain's tmpfs root is used."""
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        apply_rollup_batch(store, batch_df, batch_id)
-
-    if checkpoint is None:
-        checkpoint = scratch_dir("rollup_ckpt_")
-    return (
-        source_df.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return partial if prior is None else _combine(prior, partial)
 
 
 @register(
@@ -124,40 +178,10 @@ def maintain_user_rollup(
     """,
 )
 def q49_incremental_user_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Continuously-maintained per-user rollup, driven over a TRUE
-    multi-micro-batch stream (the q56/q57 file split: 2 time-ordered
-    files, one batch each, sentinel riding in the second) and read back
-    from the state store — the final table equals the batch aggregate
-    over all events, which is the invariant incremental maintenance must
-    hold."""
-    from kafka2delta_spark.streaming.stateful import (
-        SENTINEL_USER,
-        SPLIT_SHARDS,
-        _events_multibatch_dir,
-    )
-    from kafka2delta_spark.sources.tables import load_table
-
-    batch = load_table(spark, sf_dir, "events")
-    d = _events_multibatch_dir(spark, sf_dir)
-    stream = (
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", SPLIT_SHARDS)
-        .parquet(d)
-        # defined-user contract: the rollup is KEYED on user_id (a NULL
-        # key cannot be addressed by the state merge); isNotNull also
-        # makes the sentinel exclusion explicit rather than relying on
-        # NULL != sentinel evaluating to NULL
-        .filter(F.col("user_id").isNotNull() & (F.col("user_id") != SENTINEL_USER))
-    )
-    store = ParquetStateStore(spark, scratch_dir("rollup_state_") + "/state")
-    # same knob as drain_to_memory: every micro-batch re-plans its
-    # aggregation with the session's shuffle partitions and pays fixed
-    # cost per partition, so drop to the drain default for the run —
-    # through the one shared (guarded) context manager in drain.py
-    with drain_shuffle_partitions(spark):
-        q = maintain_user_rollup(spark, stream, store)
-        q.awaitTermination()
-    return store.read()
+    """Continuously-maintained per-user rollup read back from the state
+    store — the final table equals the batch aggregate over all events,
+    which is the invariant incremental maintenance must hold."""
+    return _drain_family(spark, sf_dir, "rollup", rollup_fold)
 
 
 @register(
@@ -228,31 +252,19 @@ def qx13_store_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, scratch_dir("cdf_state_") + "/state",
         retain_versions=2,
     )
-    apply_rollup_batch(store, ev.filter(F.unix_micros("ts") < mid), 0)
-    apply_rollup_batch(store, ev.filter(F.unix_micros("ts") >= mid), 1)
+    apply_batch(store, ev.filter(F.unix_micros("ts") < mid), 0, rollup_fold)
+    apply_batch(store, ev.filter(F.unix_micros("ts") >= mid), 1, rollup_fold)
     return store.read_changes(1, 2, ["user_id"])
 
 
-def apply_kmv_batch(
-    store: ParquetStateStore, batch_df: DataFrame, batch_id: int
-) -> bool:
-    """Fold one micro-batch's KMV sketch partial into ``store``. Keeps
-    the same batch-id ledger as :func:`apply_rollup_batch` for symmetry,
-    though KMV merge is set union — associative, commutative and
-    IDEMPOTENT — so even an undetected replay could not corrupt the
-    sketch (unlike the additive rollup, where the ledger is load-bearing)."""
+def kmv_fold(prior: DataFrame | None, batch_df: DataFrame) -> DataFrame:
+    """Per-type KMV sketch. The merge is set union — associative,
+    commutative and IDEMPOTENT — so even an undetected replay could not
+    corrupt the sketch: the ledger only skips wasted work."""
     from kafka2delta_spark.operators.advanced import kmv_merge, kmv_sketch_by_type
 
-    last = store.metadata().get("last_applied_batch_id", -1)
-    if batch_id <= last:
-        return False
     partial = kmv_sketch_by_type(batch_df)
-    prior = store.read() if store.exists() else None
-    store.overwrite(
-        partial if prior is None else kmv_merge(prior, partial),
-        metadata={"last_applied_batch_id": batch_id},
-    )
-    return True
+    return partial if prior is None else kmv_merge(prior, partial)
 
 
 def _qx19_oracle() -> str:
@@ -270,71 +282,31 @@ def _qx19_oracle() -> str:
 )
 def qx23_streaming_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Continuously-maintained approx-distinct: per-micro-batch KMV
-    sketch partials folded into the state store (foreachBatch + merge,
-    the q49 IVM shape with a sketch instead of an additive aggregate),
-    estimates read back at the end. Because sketch union is lossless
-    w.r.t. the K minimum hashes, the final table equals qx19's batch
-    answer bit-for-bit — the strongest checkable invariant a streaming
-    sketch can offer, and the 100 TB pattern for distinct-count
-    dashboards: per-partition sketch partials merge in O(K) per key, no
-    raw-key shuffle, state bounded by K x n_types regardless of
-    cardinality."""
+    sketch partials folded into the state store, estimates read back at
+    the end. Because sketch union is lossless w.r.t. the K minimum
+    hashes, the final table equals qx19's batch answer bit-for-bit — the
+    strongest checkable invariant a streaming sketch can offer, and the
+    100 TB pattern for distinct-count dashboards: per-partition sketch
+    partials merge in O(K) per key, no raw-key shuffle, state bounded by
+    K x n_types regardless of cardinality."""
     from kafka2delta_spark.operators.advanced import kmv_estimates
-    from kafka2delta_spark.sources.tables import load_table
-    from kafka2delta_spark.streaming.stateful import (
-        SENTINEL_USER,
-        SPLIT_SHARDS,
-        _events_multibatch_dir,
-    )
 
-    batch = load_table(spark, sf_dir, "events")
-    d = _events_multibatch_dir(spark, sf_dir)
-    stream = (
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", SPLIT_SHARDS)
-        .parquet(d)
-        .filter(F.col("user_id") != SENTINEL_USER)
-    )
-    store = ParquetStateStore(spark, scratch_dir("kmv_state_") + "/state")
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        apply_kmv_batch(store, batch_df, batch_id)
-
-    checkpoint = scratch_dir("kmv_ckpt_")
-    with drain_shuffle_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return kmv_estimates(store.read())
+    return kmv_estimates(_drain_family(spark, sf_dir, "kmv", kmv_fold))
 
 
-def apply_countmin_batch(
-    store: ParquetStateStore, batch_df: DataFrame, batch_id: int
-) -> bool:
-    """Fold one micro-batch's count-min cells into ``store``. Cells are
-    ADDITIVE (like the q49 rollup, unlike KMV's idempotent union), so the
-    batch-id ledger is load-bearing: a replayed batch would double-count
-    its cells without it."""
+def countmin_fold(prior: DataFrame | None, batch_df: DataFrame) -> DataFrame:
+    """Count-min cells over user_id. Cells are ADDITIVE, so the ledger
+    is load-bearing: a replayed batch would double-count its cells."""
     from kafka2delta_spark.operators.advanced import countmin_cells
 
-    last = store.metadata().get("last_applied_batch_id", -1)
-    if batch_id <= last:
-        return False
     partial = countmin_cells(batch_df, "user_id")
-    prior = store.read() if store.exists() else None
-    merged = (
-        partial
-        if prior is None
-        else prior.unionByName(partial)
+    if prior is None:
+        return partial
+    return (
+        prior.unionByName(partial)
         .groupBy("d", "col")
         .agg(F.sum("cnt").cast("bigint").alias("cnt"))
     )
-    store.overwrite(merged, metadata={"last_applied_batch_id": batch_id})
-    return True
 
 
 def _qx11_oracle() -> str:
@@ -351,81 +323,32 @@ def _qx11_oracle() -> str:
 )
 def qx31_streaming_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming-maintained count-min heavy hitters: per-micro-batch
-    sketch cells folded into the state store (additive merge + the
-    replay ledger), report read back through qx11's exact tail. Third
-    member of the maintained-aggregate family — additive rollup (q49),
-    idempotent sketch union (qx23), and now bounded-memory frequency
-    cells: 256 counters per store version regardless of batch count or
-    key cardinality, the state shape a 100 TB stream can afford."""
+    sketch cells folded into the state store, report read back through
+    qx11's exact tail. Bounded-memory frequency cells: 256 counters per
+    store version regardless of batch count or key cardinality, the
+    state shape a 100 TB stream can afford."""
     from kafka2delta_spark.operators.advanced import countmin_report
     from kafka2delta_spark.sources.tables import load_table
-    from kafka2delta_spark.streaming.stateful import (
-        SENTINEL_USER,
-        SPLIT_SHARDS,
-        _events_multibatch_dir,
-    )
 
-    batch = load_table(spark, sf_dir, "events")
-    d = _events_multibatch_dir(spark, sf_dir)
-    stream = (
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", SPLIT_SHARDS)
-        .parquet(d)
-        .filter(F.col("user_id") != SENTINEL_USER)
-    )
-    store = ParquetStateStore(spark, scratch_dir("cm_state_") + "/state")
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        apply_countmin_batch(store, batch_df, batch_id)
-
-    checkpoint = scratch_dir("cm_ckpt_")
-    with drain_shuffle_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return countmin_report(store.read(), batch)
+    cells = _drain_family(spark, sf_dir, "cm", countmin_fold)
+    return countmin_report(cells, load_table(spark, sf_dir, "events"))
 
 
-ANOM_STATE_SCHEMA = (
-    "kind string, user_id bigint, event_id bigint, ts timestamp, "
-    "v1000 bigint, n_window bigint, dev_num bigint, direction string"
-)
-
-
-def apply_anomaly_batch(
-    store: ParquetStateStore, batch_df: DataFrame, batch_id: int
-) -> bool:
-    """Fold one micro-batch into the rolling-anomaly state: flag batch
-    events against (prior per-user tail ∪ batch) with qx38's exact
-    trailing-frame rule, append the flags, and keep only the newest
-    ``ANOM_WINDOW`` events per user as the next tail. Appended flags are
-    NOT idempotent, so the batch-id ledger is load-bearing (same
-    contract as the additive rollup/count-min maintainers)."""
+def anomaly_fold(prior: DataFrame | None, batch_df: DataFrame) -> DataFrame:
+    """Flag batch events against (prior per-user tail ∪ batch) with
+    qx38's exact trailing-frame rule, append the flags, and keep only
+    the newest ``ANOM_WINDOW`` events per user as the next tail.
+    Appended flags are NOT idempotent, so the ledger is load-bearing."""
     from kafka2delta_spark.operators.analytic import (
         ANOM_WINDOW,
         flag_rolling_anomalies,
     )
 
-    last = store.metadata().get("last_applied_batch_id", -1)
-    if batch_id <= last:
-        return False
     rows = batch_df.select(
         "user_id", "event_id", "ts",
         v1000_m("value").alias("v1000"),
         F.lit(1).alias("is_new"),
     )
-    # First batch takes a dedicated path with NO empty-state scaffold:
-    # ``spark.createDataFrame([], schema)`` parallelizes into
-    # defaultParallelism EMPTY partitions, so every stage over the union
-    # scheduled `cores` no-op tasks — per-trigger cost that scaled with
-    # cluster width while state was empty (the r12-verdict 8-vs-32-core
-    # inversion). Union-with-empty ≡ the batch itself, so the fast path
-    # is bit-identical.
-    prior = store.read() if store.exists() else None
     if prior is None:
         union = rows
     else:
@@ -464,8 +387,7 @@ def apply_anomaly_batch(
     out = flagged.unionByName(keep)
     if prior is not None:
         out = prior.filter(F.col("kind") == "anom").unionByName(out)
-    store.overwrite(out, metadata={"last_applied_batch_id": batch_id})
-    return True
+    return out
 
 
 def _qx38_oracle() -> str:
@@ -489,9 +411,7 @@ def qx46_streaming_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     ANOM_WINDOW events) plus earlier same-batch events — qx38's exact
     integer rule via the shared ``flag_rolling_anomalies`` core — then
     the tail rolls forward and flags append under the replay ledger.
-    Fourth member of the maintained-aggregate family (additive rollup
-    q49, idempotent union qx23, bounded cells qx31, and now
-    ORDER-SENSITIVE windowed state): per-user state is ANOM_WINDOW rows
+    ORDER-SENSITIVE windowed state: per-user state is ANOM_WINDOW rows
     regardless of history length, the shape that lets a 100 TB event
     stream run anomaly detection with state proportional to users, not
     events.
@@ -499,39 +419,8 @@ def qx46_streaming_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     The window inside a batch shuffles on user_id exactly like the
     batch query; the tail read-modify-write is store-sized (users x
     ANOM_WINDOW rows), not history-sized."""
-    from kafka2delta_spark.sources.tables import load_table
-    from kafka2delta_spark.streaming.stateful import (
-        SENTINEL_USER,
-        SPLIT_SHARDS,
-        _events_multibatch_dir,
-    )
-
-    batch = load_table(spark, sf_dir, "events")
-    d = _events_multibatch_dir(spark, sf_dir)
-    stream = (
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", SPLIT_SHARDS)
-        .parquet(d)
-        # defined-user contract (shared with the batch sibling's
-        # oracle): per-user state cannot address a NULL key; isNotNull
-        # also makes the sentinel exclusion explicit
-        .filter(F.col("user_id").isNotNull() & (F.col("user_id") != SENTINEL_USER))
-    )
-    store = ParquetStateStore(spark, scratch_dir("anom_state_") + "/state")
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        apply_anomaly_batch(store, batch_df, batch_id)
-
-    checkpoint = scratch_dir("anom_ckpt_")
-    with drain_shuffle_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return store.read().filter(F.col("kind") == "anom").select(
+    state = _drain_family(spark, sf_dir, "anom", anomaly_fold)
+    return state.filter(F.col("kind") == "anom").select(
         "user_id", "event_id", "v1000", "n_window", "dev_num", "direction"
     )
 
@@ -689,38 +578,18 @@ def qx58_ivm_retraction_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# qx70: streaming-maintained CUSUM drift monitor — the fifth member of
-# the maintained-aggregate family. The maintained state is the
-# (event_type, day) daily-count table (additive cells under the replay
-# ledger, exactly q49's shape); the CUSUM statistic itself is recomputed
-# from the maintained table at read time via qx64's shared window tail.
-# Counts are associative+commutative, so the maintained table equals the
-# batch aggregate and qx64's oracle applies VERBATIM.
-# ---------------------------------------------------------------------------
-
-
-def apply_daily_count_batch(
-    store: ParquetStateStore, batch_df: DataFrame, batch_id: int
-) -> bool:
-    """Fold one micro-batch's (event_type, day) counts into ``store``.
-    Additive — the batch-id ledger is load-bearing on replay."""
-    last = store.metadata().get("last_applied_batch_id", -1)
-    if batch_id <= last:
-        return False
+def daily_count_fold(prior: DataFrame | None, batch_df: DataFrame) -> DataFrame:
+    """(event_type, day) counts. Additive: the ledger is load-bearing."""
     partial = batch_df.groupBy(
         "event_type", F.to_date("ts").alias("day")
     ).agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-    prior = store.read() if store.exists() else None
-    merged = (
-        partial
-        if prior is None
-        else prior.unionByName(partial)
+    if prior is None:
+        return partial
+    return (
+        prior.unionByName(partial)
         .groupBy("event_type", "day")
         .agg(F.sum("cnt").cast("bigint").alias("cnt"))
     )
-    store.overwrite(merged, metadata={"last_applied_batch_id": batch_id})
-    return True
 
 
 def _qx64_oracle() -> str:
@@ -737,86 +606,28 @@ def _qx64_oracle() -> str:
 )
 def qx70_streaming_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming-maintained CUSUM change-point monitor: per-micro-batch
-    daily counts folded into the state store (additive merge + replay
-    ledger), the drift statistic computed from the maintained table via
-    ``cusum_from_daily`` — monitoring that follows the stream instead of
-    rescanning history. State is |types| × |days| count cells: bounded by
-    the calendar, not by event volume — the cheapest state shape in the
-    family (q49 user cells, qx23 KMV unions, qx31 sketch cells, qx46
-    rolling tails)."""
+    daily counts folded into the state store, the drift statistic
+    computed from the maintained table via ``cusum_from_daily`` —
+    monitoring that follows the stream instead of rescanning history.
+    State is |types| × |days| count cells: bounded by the calendar, not
+    by event volume. The counts are keyed on type, not user, so
+    anonymous (NULL user_id) events are kept."""
     from kafka2delta_spark.operators.advanced import cusum_from_daily
-    from kafka2delta_spark.sources.tables import load_table
-    from kafka2delta_spark.streaming.stateful import (
-        SENTINEL_USER,
-        SPLIT_SHARDS,
-        _events_multibatch_dir,
+
+    return cusum_from_daily(
+        _drain_family(spark, sf_dir, "cusum", daily_count_fold, keep_null_users=True)
     )
 
-    batch = load_table(spark, sf_dir, "events")
-    d = _events_multibatch_dir(spark, sf_dir)
-    stream = (
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", SPLIT_SHARDS)
-        .parquet(d)
-        # type-keyed counts INCLUDE anonymous (NULL user_id) events —
-        # only the watermark sentinel is excluded, null-safely (plain
-        # != would silently drop NULL keys and undercount)
-        .filter(~F.col("user_id").eqNullSafe(SENTINEL_USER))
-    )
-    store = ParquetStateStore(spark, scratch_dir("cusum_state_") + "/state")
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        apply_daily_count_batch(store, batch_df, batch_id)
-
-    checkpoint = scratch_dir("cusum_ckpt_")
-    with drain_shuffle_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return cusum_from_daily(store.read())
-
-
-# ---------------------------------------------------------------------------
-# qx92: streaming-maintained retention cohorts — the sixth member of the
-# maintained-aggregate family, and the one with a DIFFERENT replay
-# contract: the maintained state is the distinct (user_id, week)
-# presence table, merged by SET UNION. Set union is idempotent, so —
-# unlike the additive cells of q49/qx31/qx70, where the batch-id ledger
-# is load-bearing against double-counting — a replayed micro-batch is
-# naturally harmless here. The ledger is still kept, but only to skip
-# wasted recomputation; correctness does not depend on it. Cohort
-# assignment (min week per user) is recomputed from the full presence
-# table at read time, so even OUT-OF-ORDER arrivals that reveal an
-# earlier first-week retroactively re-cohort the user correctly —
-# additive cell maintenance cannot do that without retractions (qx58).
-# ---------------------------------------------------------------------------
-
-
-def apply_presence_batch(
-    store: ParquetStateStore, batch_df: DataFrame, batch_id: int
-) -> bool:
-    """Fold one micro-batch's distinct (user_id, week) rows into the
-    presence state by set union (idempotent — see module comment)."""
+def presence_fold(prior: DataFrame | None, batch_df: DataFrame) -> DataFrame:
+    """Distinct (user_id, week) presence merged by SET UNION. Idempotent:
+    a replayed batch is harmless, so the ledger only skips wasted work."""
     from kafka2delta_spark.operators.analytic import WEEK_US
 
-    last = store.metadata().get("last_applied_batch_id", -1)
-    if batch_id <= last:
-        return False
     partial = batch_df.select(
         "user_id", F.expr(f"unix_micros(ts) div {WEEK_US}").alias("week")
     ).distinct()
-    prior = store.read() if store.exists() else None
-    merged = (
-        partial
-        if prior is None
-        else prior.unionByName(partial).distinct()
-    )
-    store.overwrite(merged, metadata={"last_applied_batch_id": batch_id})
-    return True
+    return partial if prior is None else prior.unionByName(partial).distinct()
 
 
 def _qx26_oracle() -> str:
@@ -839,86 +650,32 @@ def qx92_streaming_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     same code path as batch, so streaming and batch answers are
     string-identical, which the shared oracle gates). State is one row
     per (user, active-week): bounded by users × calendar, not event
-    volume, and replay-safe WITHOUT the ledger (kept only to skip
-    wasted work) — the idempotent-base IVM contract, contrasted with
-    the family's additive-cell members (q49/qx31/qx70) where the ledger
-    is load-bearing."""
+    volume. Cohort assignment (min week per user) is recomputed from the
+    full presence table at read time, so an OUT-OF-ORDER arrival that
+    reveals an earlier first week re-cohorts the user correctly —
+    additive cell maintenance cannot do that without retractions (qx58)."""
     from kafka2delta_spark.operators.analytic import retention_matrix
-    from kafka2delta_spark.sources.tables import load_table
-    from kafka2delta_spark.streaming.stateful import (
-        SENTINEL_USER,
-        SPLIT_SHARDS,
-        _events_multibatch_dir,
-    )
 
-    batch = load_table(spark, sf_dir, "events")
-    d = _events_multibatch_dir(spark, sf_dir)
-    stream = (
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", SPLIT_SHARDS)
-        .parquet(d)
-        # defined-user contract (shared with the batch sibling's
-        # oracle): per-user state cannot address a NULL key; isNotNull
-        # also makes the sentinel exclusion explicit
-        .filter(F.col("user_id").isNotNull() & (F.col("user_id") != SENTINEL_USER))
-    )
-    store = ParquetStateStore(spark, scratch_dir("ret_state_") + "/state")
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        apply_presence_batch(store, batch_df, batch_id)
-
-    checkpoint = scratch_dir("ret_ckpt_")
-    with drain_shuffle_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return retention_matrix(store.read())
+    return retention_matrix(_drain_family(spark, sf_dir, "ret", presence_fold))
 
 
-# ---------------------------------------------------------------------------
-# qx99: streaming-maintained session concurrency — the seventh member of
-# the maintained-aggregate family, and the second with the
-# IDEMPOTENT-BASE contract (qx92): the maintained state is the per-user
-# SESSION-INTERVAL set, folded per micro-batch by gap-tolerant interval
-# union (behavior.py::merge_gap_intervals). Gap-merge is a closure
-# operation — merging in stages over any partition of the events equals
-# sessionizing everything at once — so replays are harmless without the
-# ledger, and a batch that BRIDGES two previously-separate intervals
-# (an event landing in the gap) correctly fuses them, which per-session
-# additive cells could not. The qx82 sweep is derived from state at
-# read time via the shared concurrency_from_intervals, so qx82's oracle
-# applies VERBATIM.
-# ---------------------------------------------------------------------------
-
-
-def apply_session_interval_batch(
-    store: ParquetStateStore, batch_df: DataFrame, batch_id: int
-) -> bool:
-    """Fold one micro-batch into the session-interval state: batch
-    events become degenerate [us, us] intervals, unioned with the prior
-    intervals and gap-merged per user (idempotent — see section
-    comment; the ledger only skips wasted recomputation)."""
+def session_interval_fold(prior: DataFrame | None, batch_df: DataFrame) -> DataFrame:
+    """Batch events become degenerate [us, us] intervals, unioned with
+    the prior intervals and gap-merged per user. Gap-merge is a closure
+    operation — merging in stages over any partition of the events equals
+    sessionizing everything at once — so a replay is harmless (the ledger
+    only skips wasted work), and a batch that BRIDGES two intervals fuses
+    them, which per-session additive cells could not."""
     from kafka2delta_spark.operators.behavior import merge_gap_intervals
 
-    last = store.metadata().get("last_applied_batch_id", -1)
-    if batch_id <= last:
-        return False
     partial = batch_df.select(
         "user_id",
         F.unix_micros("ts").alias("s_us"),
         F.unix_micros("ts").alias("e_us"),
     )
-    prior = store.read() if store.exists() else None
-    union = partial if prior is None else prior.unionByName(partial)
-    store.overwrite(
-        merge_gap_intervals(union),
-        metadata={"last_applied_batch_id": batch_id},
+    return merge_gap_intervals(
+        partial if prior is None else prior.unionByName(partial)
     )
-    return True
 
 
 def _qx82_oracle() -> str:
@@ -944,83 +701,27 @@ def qx99_streaming_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``concurrency_from_intervals`` — same code path as batch, which the
     shared oracle gates). State is one row per SESSION, not per event —
     the interval set is the minimal sufficient statistic for
-    concurrency — and unlike a per-batch sessionizer, a late batch
-    whose events bridge two intervals fuses them exactly as full-batch
-    sessionization would."""
+    concurrency."""
     from kafka2delta_spark.operators.behavior import (
         concurrency_from_intervals,
     )
-    from kafka2delta_spark.sources.tables import load_table
-    from kafka2delta_spark.streaming.stateful import (
-        SENTINEL_USER,
-        SPLIT_SHARDS,
-        _events_multibatch_dir,
+
+    return concurrency_from_intervals(
+        _drain_family(spark, sf_dir, "conc", session_interval_fold)
     )
 
-    batch = load_table(spark, sf_dir, "events")
-    d = _events_multibatch_dir(spark, sf_dir)
-    stream = (
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", SPLIT_SHARDS)
-        .parquet(d)
-        # defined-user contract (shared with the batch sibling's
-        # oracle): per-user state cannot address a NULL key; isNotNull
-        # also makes the sentinel exclusion explicit
-        .filter(F.col("user_id").isNotNull() & (F.col("user_id") != SENTINEL_USER))
-    )
-    store = ParquetStateStore(spark, scratch_dir("conc_state_") + "/state")
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        apply_session_interval_batch(store, batch_df, batch_id)
-
-    checkpoint = scratch_dir("conc_ckpt_")
-    with drain_shuffle_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return concurrency_from_intervals(store.read())
-
-
-# ---------------------------------------------------------------------------
-# qy10: streaming-maintained inter-arrival histogram — the EIGHTH member
-# of the maintained-aggregate family, and the first whose state carries
-# BOTH contracts at once: the (event_type, bucket) histogram cells are
-# additive with min/max-mergeable extremes (ledger load-bearing, the
-# q49/qx31/qx70 contract), while the per-(user, type) last-seen
-# timestamps are max-merge closures (idempotent, the qx92/qx99
-# contract). The cross-batch subtlety is the BOUNDARY GAP: each batch's
-# first event of a (user, type) pair must measure its gap against the
-# last event of that pair from EARLIER batches — qx46's tail-handoff
-# idiom with a 1-row tail. Micro-batches arrive in event-time order (the
-# same two-file split every drain here uses, with batch-1 timestamps
-# strictly above batch-0's), so staged gap chains equal the whole-table
-# lag exactly and qx96's oracle applies VERBATIM.
-# ---------------------------------------------------------------------------
-
-#: unified state schema: kind='cell' rows hold the histogram, kind='last'
-#: rows hold per-(user, type) latest event micros
-_GAP_STATE_SCHEMA = (
-    "kind string, event_type string, bucket int, n bigint, "
-    "min_gap_s bigint, max_gap_s bigint, user_id bigint, last_us bigint"
-)
-
-
-def apply_interarrival_batch(
-    store: ParquetStateStore, batch_df: DataFrame, batch_id: int
-) -> bool:
-    """Fold one micro-batch's same-type inter-arrival gaps into the
-    histogram state. Within-batch gaps come from the qx96 lag window;
-    each (user, type)'s FIRST batch event takes its gap from the stored
-    last-seen row instead (NULL when the pair is new)."""
+def interarrival_fold(prior: DataFrame | None, batch_df: DataFrame) -> DataFrame:
+    """Same-type inter-arrival gaps into (event_type, bucket) histogram
+    cells plus per-(user, type) last-seen rows (``kind`` tells them
+    apart). Within-batch gaps come from the qx96 lag window; each
+    (user, type)'s FIRST batch event takes its gap from the stored
+    last-seen row instead (NULL when the pair is new) — qx46's tail
+    handoff with a 1-row tail. Mixed replay contract: cell counts are
+    additive (the ledger is load-bearing), cell extremes and last-seen
+    are max/min-merge closures (idempotent on their own)."""
     from kafka2delta_spark.operators.behavior import _log2_bucket_sql
 
-    last = store.metadata().get("last_applied_batch_id", -1)
-    if batch_id <= last:
-        return False
     wu = W.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
     rows = batch_df.select(
         "user_id",
@@ -1028,14 +729,6 @@ def apply_interarrival_batch(
         F.unix_micros("ts").alias("us"),
         F.lag(F.unix_micros("ts")).over(wu).alias("prev_us"),
     )
-    # First batch takes a dedicated path with NO empty-state scaffold:
-    # ``spark.createDataFrame([], schema)`` parallelizes into
-    # defaultParallelism EMPTY partitions, so every stage over the union
-    # scheduled `cores` no-op tasks — per-trigger cost that scaled with
-    # cluster width while state was empty (the r12-verdict 8-vs-32-core
-    # inversion). Union-with-empty ≡ the partial itself, so the fast path
-    # is bit-identical.
-    prior = store.read() if store.exists() else None
     # boundary handoff: batch-first events (prev_us NULL) read the stored
     # last-seen micros; truly-new pairs stay NULL and emit no gap
     if prior is None:
@@ -1064,9 +757,8 @@ def apply_interarrival_batch(
             .filter(F.col("gap_s").isNotNull())
         )
     # One aggregation merges batch gaps AND prior cells (sum/min/max are
-    # associative, so pre-aggregating the batch first then re-merging —
-    # the old two-exchange shape — computes the same cells; the map-side
-    # partial combine still collapses the gap rows before the shuffle).
+    # associative; the map-side partial combine still collapses the gap
+    # rows before the shuffle).
     gap_cells = gaps.select(
         "event_type",
         F.expr(_log2_bucket_sql("gap_s")).cast("int").alias("bucket"),
@@ -1085,11 +777,8 @@ def apply_interarrival_batch(
         F.min("min_gap_s").cast("bigint").alias("min_gap_s"),
         F.max("max_gap_s").cast("bigint").alias("max_gap_s"),
     )
-    # last-seen roll-forward: max-merge (idempotent closure — batches are
-    # time-ordered, but max-merge stays correct even if they were not).
-    # Raw batch rows union prior last-rows into ONE max aggregation — the
-    # old agg-then-merge-agg pair costs an extra exchange for the same
-    # result (max is associative).
+    # last-seen roll-forward: raw batch rows union prior last-rows into ONE
+    # max aggregation (max-merge stays correct even for unordered batches)
     batch_last = batch_df.select(
         "user_id", "event_type", F.unix_micros("ts").alias("last_us")
     )
@@ -1098,7 +787,7 @@ def apply_interarrival_batch(
     new_last = batch_last.groupBy("user_id", "event_type").agg(
         F.max("last_us").alias("last_us")
     )
-    merged = cells.select(
+    return cells.select(
         F.lit("cell").alias("kind"),
         "event_type",
         "bucket",
@@ -1119,8 +808,6 @@ def apply_interarrival_batch(
             "last_us",
         )
     )
-    store.overwrite(merged, metadata={"last_applied_batch_id": batch_id})
-    return True
 
 
 def _qx96_oracle() -> str:
@@ -1141,48 +828,12 @@ def qy10_streaming_interarrival(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch, same-type gaps are bucketed by qx96's integer CASE ladder and
     folded into (event_type, bucket) cells, with each batch's first
     event per (user, type) measuring against the stored last-seen
-    timestamp (qx46's tail handoff, shrunk to a 1-row tail). The readout
-    derives per-type shares from the cells exactly as qx96 does, so the
-    shared oracle gates streaming == batch.
-
-    State is users×types last-seen rows plus an alphabet-bounded cell
-    table — nothing scales with event volume. Mixed replay contract,
-    documented per leg: cell counts are additive (the batch-id ledger is
-    load-bearing), cell extremes and last-seen are idempotent merges
-    (replay-harmless on their own)."""
-    from kafka2delta_spark.sources.tables import load_table
-    from kafka2delta_spark.streaming.stateful import (
-        SENTINEL_USER,
-        SPLIT_SHARDS,
-        _events_multibatch_dir,
-    )
-
-    batch = load_table(spark, sf_dir, "events")
-    d = _events_multibatch_dir(spark, sf_dir)
-    stream = (
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", SPLIT_SHARDS)
-        .parquet(d)
-        # defined-user contract (shared with the batch sibling's
-        # oracle): per-user state cannot address a NULL key; isNotNull
-        # also makes the sentinel exclusion explicit
-        .filter(F.col("user_id").isNotNull() & (F.col("user_id") != SENTINEL_USER))
-    )
-    store = ParquetStateStore(spark, scratch_dir("gap_state_") + "/state")
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        apply_interarrival_batch(store, batch_df, batch_id)
-
-    checkpoint = scratch_dir("gap_ckpt_")
-    with drain_shuffle_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    cells = store.read().filter(F.col("kind") == "cell")
+    timestamp. The readout derives per-type shares from the cells exactly
+    as qx96 does, so the shared oracle gates streaming == batch. State is
+    users×types last-seen rows plus an alphabet-bounded cell table —
+    nothing scales with event volume."""
+    state = _drain_family(spark, sf_dir, "gap", interarrival_fold)
+    cells = state.filter(F.col("kind") == "cell")
     t = cells.groupBy("event_type").agg(F.sum("n").alias("tot"))
     return cells.join(F.broadcast(t), "event_type").select(
         "event_type",

@@ -83,6 +83,31 @@ SPLIT_FRAC = 0.5
 _SPLIT_DIRS: dict[tuple[str, float], str] = {}
 
 
+def _split_prefix(sf_dir: str) -> str:
+    """Name prefix shared by every split dir of ``sf_dir`` (and of any
+    directory below it)."""
+    return os.path.join(
+        tempfile.gettempdir(),
+        f"events_split3_{sf_dir.strip('/').replace('/', '_')}",
+    )
+
+
+def _split_dir(sf_dir: str) -> str:
+    """Scratch dir of ``sf_dir``'s two-half events split. Deterministic,
+    keyed by the source dir AND the events file's identity (mtime_ns,
+    size) -> built once per machine, reused across processes (bench runs
+    pay the split only once), but a REGENERATED events table gets a fresh
+    split instead of a stale one (the same staleness contract as the
+    session memo's content fingerprint — see test_cache_fingerprint.py).
+    The split fraction is part of the key so the boundary-shuffle test's
+    placements never collide with the default build."""
+    st = os.stat(os.path.join(sf_dir, "events.parquet"))
+    return (
+        f"{_split_prefix(sf_dir)}_{st.st_mtime_ns}_{st.st_size}"
+        f"_f{SPLIT_FRAC:g}"
+    )
+
+
 def _events_multibatch_dir(spark: SparkSession, sf_dir: str) -> str:
     """Split the events table into two time-ordered parquet halves — the
     second carrying a far-future sentinel event appended after the real
@@ -121,20 +146,7 @@ def _events_multibatch_dir(spark: SparkSession, sf_dir: str) -> str:
     sort b0 first as a tie-breaker."""
     if (sf_dir, SPLIT_FRAC) in _SPLIT_DIRS:
         return _SPLIT_DIRS[(sf_dir, SPLIT_FRAC)]
-    # deterministic scratch path keyed by the source dir AND the events
-    # file's identity (mtime_ns, size) -> built once per machine, reused
-    # across processes (bench runs pay the split only once), but a
-    # REGENERATED events table gets a fresh split instead of a stale one
-    # (the same staleness contract as the shingle postings cache's
-    # content fingerprint — see test_cache_fingerprint.py). The split
-    # fraction is part of the key so the boundary-shuffle test's
-    # placements never collide with the default build.
-    st = os.stat(os.path.join(sf_dir, "events.parquet"))
-    key = (
-        f"{sf_dir.strip('/').replace('/', '_')}"
-        f"_{st.st_mtime_ns}_{st.st_size}_f{SPLIT_FRAC:g}"
-    )
-    d = os.path.join(tempfile.gettempdir(), f"events_split3_{key}")
+    d = _split_dir(sf_dir)
     stream_dir = f"{d}/stream"
     if os.path.isdir(stream_dir) and len(os.listdir(stream_dir)) == 2 * SPLIT_SHARDS:
         _SPLIT_DIRS[(sf_dir, SPLIT_FRAC)] = stream_dir

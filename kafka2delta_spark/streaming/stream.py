@@ -37,7 +37,7 @@ from kafka2delta_spark.cdc.debezium import cast_debezium_columns
 from kafka2delta_spark.cdc.dedup import latest_per_key
 from kafka2delta_spark.cdc.merge import (
     defined_keys_predicate,
-    merge_cdc_batch,
+    merge_cdc_batch_evolving,
 )
 from kafka2delta_spark.cdc.registry import SchemaRegistry, column_names_from_schema_str
 from kafka2delta_spark.cdc.wire import parse_confluent_envelope
@@ -224,35 +224,13 @@ def _apply_latest_to_store(
     if store.merge(latest, pk_cols, lsn_col, deleted_col):
         return
 
-    state = store.read()
     # Schema evolution (Delta autoMerge equivalent, ref conftest.py:101):
-    # union by name with missing columns as NULLs in either direction.
-    if state is not None and set(state.columns) != set(
-        c for c in latest.columns if c != deleted_col
-    ):
-        target_cols = [c for c in latest.columns if c != deleted_col]
-        merged_cols = list(dict.fromkeys(list(state.columns) + target_cols))
-        # typed NULLs (never NullType — parquet can't store void)
-        dtypes = dict(state.dtypes) | dict(latest.dtypes)
-        state = state.select(
-            *[
-                F.col(c)
-                if c in state.columns
-                else F.lit(None).cast(dtypes[c]).alias(c)
-                for c in merged_cols
-            ]
+    # union by name with missing columns as typed NULLs in either direction.
+    store.overwrite(
+        merge_cdc_batch_evolving(
+            store.read(), latest, pk_cols, lsn_col, deleted_col
         )
-        latest = latest.select(
-            *[
-                F.col(c)
-                if c in latest.columns
-                else F.lit(None).cast(dtypes[c]).alias(c)
-                for c in merged_cols
-            ],
-            deleted_col,
-        )
-    new_state = merge_cdc_batch(state, latest, pk_cols, lsn_col, deleted_col)
-    store.overwrite(new_state)
+    )
 
 
 def apply_cdc_micro_batch(

@@ -12,7 +12,12 @@ import gc
 import shutil
 import weakref
 
-from kafka2delta_spark.sources.tables import clear, memo, sf_fingerprint
+from kafka2delta_spark.sources.tables import (
+    _MEMO_ATTR,
+    clear,
+    memo,
+    sf_fingerprint,
+)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -71,6 +76,30 @@ def test_memo_builds_once_per_session_until_cleared():
     assert memo(s1, "kind", "/no/such/dir", 3, build=build) is not first
     assert len(builds) == 4, "clear forces a rebuild"
     assert memo(s2, "kind", "/no/such/dir", 3, build=build) is other
+
+
+def test_memo_replaces_superseded_entry_on_rewrite(tmp_path):
+    """A rewritten file rebuilds the entry AND drops the superseded one:
+    the table holds one entry per (kind, sf_dir), not one per fingerprint."""
+    builds = []
+
+    def build():
+        builds.append(1)
+        return _Built()
+
+    d = str(tmp_path)
+    (tmp_path / "events.parquet").write_bytes(b"v1")
+    s = _Session()
+    first = memo(s, "kind", d, build=build)
+    assert memo(s, "kind", d, build=build) is first and len(builds) == 1
+
+    (tmp_path / "events.parquet").write_bytes(b"version two")
+    second = memo(s, "kind", d, build=build)
+    assert second is not first and len(builds) == 2, "rewrite must rebuild"
+    assert memo(s, "kind", d, build=build) is second and len(builds) == 2
+
+    table = s.__dict__[_MEMO_ATTR]
+    assert [k for k in table if k[:2] == ("kind", d)] == [("kind", d)]
 
 
 def test_memo_table_dies_with_its_session():

@@ -20,8 +20,9 @@ from pyspark.sql import functions as F
 from kafka2delta_spark.session import local_rows
 from kafka2delta_spark.state.store import ParquetStateStore
 from kafka2delta_spark.streaming.incremental import (
-    apply_anomaly_batch,
-    apply_interarrival_batch,
+    anomaly_fold,
+    apply_batch,
+    interarrival_fold,
 )
 
 
@@ -63,30 +64,30 @@ ANOM_SCHEMA = (
 
 
 @pytest.mark.parametrize(
-    "apply_fn, schema",
+    "fold, schema",
     [
-        (apply_interarrival_batch, GAP_SCHEMA),
-        (apply_anomaly_batch, ANOM_SCHEMA),
+        (interarrival_fold, GAP_SCHEMA),
+        (anomaly_fold, ANOM_SCHEMA),
     ],
     ids=["interarrival", "anomaly"],
 )
 def test_batch0_fast_path_equals_union_with_empty(
-    spark, tmp_path, apply_fn, schema
+    spark, tmp_path, fold, schema
 ):
     b0 = _events_batch(spark, 0)
     b1 = _events_batch(spark, 1)
 
     # fast path: fresh store, batch 0 sees no prior
     fast = ParquetStateStore(spark, str(tmp_path / "fast"))
-    apply_fn(fast, b0, 0)
-    apply_fn(fast, b1, 1)
+    apply_batch(fast, b0, 0, fold)
+    apply_batch(fast, b1, 1, fold)
 
     # union path: store pre-seeded with an EMPTY typed snapshot, so
     # batch 0 takes the prior-union branch over zero state rows
     seeded = ParquetStateStore(spark, str(tmp_path / "seeded"))
     seeded.overwrite(local_rows(spark, [], schema))
-    apply_fn(seeded, b0, 1)  # ledger: batch_id must exceed the seed commit's
-    apply_fn(seeded, b1, 2)
+    apply_batch(seeded, b0, 1, fold)  # ledger: batch_id must exceed the seed commit's
+    apply_batch(seeded, b1, 2, fold)
 
     a = sorted(map(str, fast.read().collect()))
     b = sorted(map(str, seeded.read().collect()))

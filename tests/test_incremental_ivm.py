@@ -4,10 +4,10 @@ shared drain guard.
 foreachBatch is at-least-once: after a sink commit, the same batch can be
 delivered again (retry before the checkpoint records it, or a restart).
 Additive aggregates have no natural replay guard — unlike the CDC path's
-LSN comparison — so apply_rollup_batch keeps a batch-id ledger committed
-atomically with each snapshot. These tests drive the batch function
-directly with replays, out-of-order retries, and a restart-shaped replay,
-asserting the rollup equals the batch oracle every time.
+LSN comparison — so apply_batch keeps a batch-id ledger committed
+atomically with each snapshot. These tests drive the rollup fold through
+apply_batch directly with replays, out-of-order retries, and a
+restart-shaped replay, asserting the rollup equals the batch oracle every time.
 """
 
 from __future__ import annotations
@@ -20,7 +20,8 @@ from kafka2delta_spark.state.store import ParquetStateStore
 from kafka2delta_spark.streaming.incremental import (
     _combine,
     _partial,
-    apply_rollup_batch,
+    apply_batch,
+    rollup_fold,
 )
 
 
@@ -45,10 +46,10 @@ def store(spark, tmp_path):
 
 def test_replayed_batch_is_noop(spark, store):
     b0 = _events(spark, [(1, 1.0), (1, 2.0), (2, 5.0)])
-    assert apply_rollup_batch(store, b0, 0) is True
+    assert apply_batch(store, b0, 0, rollup_fold) is True
     after_first = _rollup(store)
     # at-least-once retry: same batch id delivered again
-    assert apply_rollup_batch(store, b0, 0) is False
+    assert apply_batch(store, b0, 0, rollup_fold) is False
     assert _rollup(store) == after_first
     assert store.metadata() == {"last_applied_batch_id": 0}
 
@@ -56,11 +57,11 @@ def test_replayed_batch_is_noop(spark, store):
 def test_stale_batch_after_newer_commit_is_noop(spark, store):
     b0 = _events(spark, [(1, 1.0)])
     b1 = _events(spark, [(1, 3.0), (2, 4.0)])
-    apply_rollup_batch(store, b0, 0)
-    apply_rollup_batch(store, b1, 1)
+    apply_batch(store, b0, 0, rollup_fold)
+    apply_batch(store, b1, 1, rollup_fold)
     after = _rollup(store)
     # restart replays an older batch the checkpoint already advanced past
-    assert apply_rollup_batch(store, b0, 0) is False
+    assert apply_batch(store, b0, 0, rollup_fold) is False
     assert _rollup(store) == after
     assert store.metadata() == {"last_applied_batch_id": 1}
 
@@ -74,8 +75,8 @@ def test_replay_sequence_matches_batch_oracle(spark, store):
         _events(spark, [(2, 1.0), (3, 1.0), (1, 1.0)]),
     ]
     for i, b in enumerate(batches):
-        apply_rollup_batch(store, b, i)
-        apply_rollup_batch(store, b, i)  # immediate retry of every batch
+        apply_batch(store, b, i, rollup_fold)
+        apply_batch(store, b, i, rollup_fold)  # immediate retry of every batch
     allb = batches[0]
     for b in batches[1:]:
         allb = allb.unionByName(b)
@@ -99,11 +100,11 @@ def test_optimize_preserves_replay_ledger(spark, store):
     """Compaction commits a new version; the batch-id ledger must ride
     along or a post-OPTIMIZE replay double-applies."""
     b0 = _events(spark, [(1, 1.0), (2, 2.0)])
-    apply_rollup_batch(store, b0, 0)
+    apply_batch(store, b0, 0, rollup_fold)
     before = _rollup(store)
     store.optimize(target_files=1)
     assert store.metadata() == {"last_applied_batch_id": 0}
-    assert apply_rollup_batch(store, b0, 0) is False  # replay still a no-op
+    assert apply_batch(store, b0, 0, rollup_fold) is False  # replay still a no-op
     assert _rollup(store) == before
 
 
@@ -181,9 +182,9 @@ if HAVE_HYPOTHESIS:
             rows = [(u, float(v)) for u, v in events]
             all_events.extend(rows)
             b = _events(spark, rows)
-            apply_rollup_batch(store, b, batch_id)
+            apply_batch(store, b, batch_id, rollup_fold)
             if replay:
-                apply_rollup_batch(store, b, batch_id)
+                apply_batch(store, b, batch_id, rollup_fold)
         # timestamps differ per _events call (index-based), so compare the
         # additive columns only
         got = sorted(
@@ -217,21 +218,21 @@ def _sketch(store):
 
 
 def test_kmv_split_application_equals_single_batch(spark, tmp_path):
-    from kafka2delta_spark.streaming.incremental import apply_kmv_batch
+    from kafka2delta_spark.streaming.incremental import apply_batch, kmv_fold
 
     rows = [("click", u % 37) for u in range(100)] + [
         ("view", u % 91) for u in range(100)
     ]
     split = ParquetStateStore(spark, str(tmp_path / "a"))
-    assert apply_kmv_batch(split, _typed_events(spark, rows[:73]), 0)
-    assert apply_kmv_batch(split, _typed_events(spark, rows[73:]), 1)
+    assert apply_batch(split, _typed_events(spark, rows[:73]), 0, kmv_fold)
+    assert apply_batch(split, _typed_events(spark, rows[73:]), 1, kmv_fold)
     # at-least-once retry of the last batch: ledger makes it a no-op
     before = _sketch(split)
-    assert apply_kmv_batch(split, _typed_events(spark, rows[73:]), 1) is False
+    assert apply_batch(split, _typed_events(spark, rows[73:]), 1, kmv_fold) is False
     assert _sketch(split) == before
 
     whole = ParquetStateStore(spark, str(tmp_path / "b"))
-    apply_kmv_batch(whole, _typed_events(spark, rows), 0)
+    apply_batch(whole, _typed_events(spark, rows), 0, kmv_fold)
     assert _sketch(split) == _sketch(whole)
 
 
@@ -274,7 +275,7 @@ if HAVE_HYPOTHESIS:
         maintained KMV sketch equals the one-shot sketch over all rows —
         here replay safety comes from the merge itself (set union), the
         ledger is belt-and-braces."""
-        from kafka2delta_spark.streaming.incremental import apply_kmv_batch
+        from kafka2delta_spark.streaming.incremental import apply_batch, kmv_fold
 
         store = ParquetStateStore(
             spark, str(tmp_path_factory.mktemp("prop_kmv")) + "/state"
@@ -283,16 +284,17 @@ if HAVE_HYPOTHESIS:
         for batch_id, (rows, replay) in enumerate(run):
             all_rows.extend(rows)
             b = spark.createDataFrame(rows, "event_type string, user_id long")
-            apply_kmv_batch(store, b, batch_id)
+            apply_batch(store, b, batch_id, kmv_fold)
             if replay:
-                apply_kmv_batch(store, b, batch_id)
+                apply_batch(store, b, batch_id, kmv_fold)
         whole = ParquetStateStore(
             spark, str(tmp_path_factory.mktemp("prop_kmv_whole")) + "/state"
         )
-        apply_kmv_batch(
+        apply_batch(
             whole,
             spark.createDataFrame(all_rows, "event_type string, user_id long"),
             0,
+            kmv_fold,
         )
         got = sorted(
             (r["event_type"], tuple(r["kmins"])) for r in store.read().collect()
@@ -304,21 +306,21 @@ if HAVE_HYPOTHESIS:
 
 
 def test_countmin_split_replay_equals_single_batch(spark, tmp_path):
-    from kafka2delta_spark.streaming.incremental import apply_countmin_batch
+    from kafka2delta_spark.streaming.incremental import apply_batch, countmin_fold
 
     rows = [("e", u % 17) for u in range(120)]
     split = ParquetStateStore(spark, str(tmp_path / "cma"))
     b0 = _typed_events(spark, rows[:50])
     b1 = _typed_events(spark, rows[50:])
-    assert apply_countmin_batch(split, b0, 0)
-    assert apply_countmin_batch(split, b1, 1)
+    assert apply_batch(split, b0, 0, countmin_fold)
+    assert apply_batch(split, b1, 1, countmin_fold)
     before = sorted(tuple(r) for r in split.read().collect())
     # additive cells MUST be guarded: replay is a no-op only via the ledger
-    assert apply_countmin_batch(split, b1, 1) is False
+    assert apply_batch(split, b1, 1, countmin_fold) is False
     assert sorted(tuple(r) for r in split.read().collect()) == before
 
     whole = ParquetStateStore(spark, str(tmp_path / "cmb"))
-    apply_countmin_batch(whole, _typed_events(spark, rows), 0)
+    apply_batch(whole, _typed_events(spark, rows), 0, countmin_fold)
     assert before == sorted(tuple(r) for r in whole.read().collect())
 
 
@@ -328,7 +330,11 @@ def test_kmv_maintenance_restart_from_checkpoint(spark, tmp_path):
     offsets must not replay (ledger version pins that no merge re-ran on
     the no-new-input restart), and the final sketch equals the one-shot
     sketch over both batches."""
-    from kafka2delta_spark.streaming.incremental import apply_kmv_batch
+    from kafka2delta_spark.streaming.incremental import (
+        apply_batch,
+        kmv_fold,
+        maintain,
+    )
 
     src = str(tmp_path / "src")
     ckpt = str(tmp_path / "ckpt")
@@ -344,16 +350,7 @@ def test_kmv_maintenance_restart_from_checkpoint(spark, tmp_path):
         stream = spark.readStream.schema(
             "event_type string, user_id long"
         ).parquet(src)
-
-        def merge(batch_df, batch_id):
-            apply_kmv_batch(store, batch_df, batch_id)
-
-        return (
-            stream.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
+        return maintain(stream, store, kmv_fold, checkpoint=ckpt)
 
     feed(rows1)
     q = start()
@@ -373,7 +370,7 @@ def test_kmv_maintenance_restart_from_checkpoint(spark, tmp_path):
     q.awaitTermination()
 
     whole = ParquetStateStore(spark, str(tmp_path / "whole"))
-    apply_kmv_batch(whole, _typed_events(spark, rows1 + rows2), 0)
+    apply_batch(whole, _typed_events(spark, rows1 + rows2), 0, kmv_fold)
     assert _sketch(store) == _sketch(whole)
 
 
@@ -406,7 +403,7 @@ def _flags(store):
 def test_anomaly_split_application_equals_single_batch(spark, tmp_path):
     """Time-ordered split points anywhere (including mid-anomaly-window)
     must not change the flag set, and a replayed batch is a ledger no-op."""
-    from kafka2delta_spark.streaming.incremental import apply_anomaly_batch
+    from kafka2delta_spark.streaming.incremental import apply_batch, anomaly_fold
 
     # user 1: stable around 10 with one spike; user 2: noisy ramp
     rows = [(1, m, 10.0 + (m % 3) * 0.5) for m in range(20)]
@@ -417,7 +414,7 @@ def test_anomaly_split_application_equals_single_batch(spark, tmp_path):
     spike_id = next(i for i, u, m, v in rows if v == 500.0)
 
     whole = ParquetStateStore(spark, str(tmp_path / "w"))
-    assert apply_anomaly_batch(whole, _anom_events(spark, rows), 0)
+    assert apply_batch(whole, _anom_events(spark, rows), 0, anomaly_fold)
     want = _flags(whole)
     assert any(r[1] == spike_id for r in want), (
         "the engineered spike must be flagged"
@@ -425,12 +422,13 @@ def test_anomaly_split_application_equals_single_batch(spark, tmp_path):
 
     for cut in (7, 13, 20, 33):
         split = ParquetStateStore(spark, str(tmp_path / f"s{cut}"))
-        assert apply_anomaly_batch(split, _anom_events(spark, rows[:cut]), 0)
-        assert apply_anomaly_batch(split, _anom_events(spark, rows[cut:]), 1)
+        assert apply_batch(split, _anom_events(spark, rows[:cut]), 0, anomaly_fold)
+        assert apply_batch(split, _anom_events(spark, rows[cut:]), 1, anomaly_fold)
         assert _flags(split) == want, f"cut at {cut}"
         # at-least-once retry: ledger makes the replay a no-op
         before = _flags(split)
-        assert apply_anomaly_batch(split, _anom_events(spark, rows[cut:]), 1) is False
+        replay = _anom_events(spark, rows[cut:])
+        assert apply_batch(split, replay, 1, anomaly_fold) is False
         assert _flags(split) == before
 
 
@@ -442,7 +440,11 @@ def test_anomaly_maintenance_restart_from_checkpoint(spark, tmp_path):
     handed across the restart is what makes this stricter than the
     sketch version: a lost or doubled tail changes flags, not just
     counts."""
-    from kafka2delta_spark.streaming.incremental import apply_anomaly_batch
+    from kafka2delta_spark.streaming.incremental import (
+        anomaly_fold,
+        apply_batch,
+        maintain,
+    )
 
     src = str(tmp_path / "src")
     ckpt = str(tmp_path / "ckpt")
@@ -462,16 +464,7 @@ def test_anomaly_maintenance_restart_from_checkpoint(spark, tmp_path):
         stream = spark.readStream.schema(
             "event_id long, user_id long, ts timestamp, value double"
         ).parquet(src)
-
-        def merge(batch_df, batch_id):
-            apply_anomaly_batch(store, batch_df, batch_id)
-
-        return (
-            stream.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
+        return maintain(stream, store, anomaly_fold, checkpoint=ckpt)
 
     feed(rows1)
     q = start()
@@ -491,7 +484,7 @@ def test_anomaly_maintenance_restart_from_checkpoint(spark, tmp_path):
     q.awaitTermination()
 
     whole = ParquetStateStore(spark, str(tmp_path / "whole"))
-    apply_anomaly_batch(whole, _anom_events(spark, rows), 0)
+    apply_batch(whole, _anom_events(spark, rows), 0, anomaly_fold)
     assert _flags(store) == _flags(whole)
     assert any(r[1] == next(i for i, u, m, v in rows if v == 500.0)
                for r in _flags(store))
@@ -528,7 +521,8 @@ def test_interarrival_boundary_gap_crosses_batches(spark, tmp_path):
     """A (user, type) pair split across batches must produce the SAME
     cells as one batch holding everything — the 1-row tail handoff."""
     from kafka2delta_spark.streaming.incremental import (
-        apply_interarrival_batch,
+        apply_batch,
+        interarrival_fold,
     )
 
     rows = [
@@ -539,10 +533,10 @@ def test_interarrival_boundary_gap_crosses_batches(spark, tmp_path):
         (2, "view", 5, 21),      # gap 0 (tie, ordered by event_id) -> bucket 0
     ]
     staged = ParquetStateStore(spark, str(tmp_path / "staged"))
-    apply_interarrival_batch(staged, _gap_events(spark, rows[:2]), 0)
-    apply_interarrival_batch(staged, _gap_events(spark, rows[2:]), 1)
+    apply_batch(staged, _gap_events(spark, rows[:2]), 0, interarrival_fold)
+    apply_batch(staged, _gap_events(spark, rows[2:]), 1, interarrival_fold)
     single = ParquetStateStore(spark, str(tmp_path / "single"))
-    apply_interarrival_batch(single, _gap_events(spark, rows), 0)
+    apply_batch(single, _gap_events(spark, rows), 0, interarrival_fold)
     assert _cells(staged) == _cells(single)
     # and the boundary gap really landed: 297 s -> bucket 9
     assert any(c[1] == 9 and c[2] == 1 for c in _cells(staged))
@@ -550,29 +544,31 @@ def test_interarrival_boundary_gap_crosses_batches(spark, tmp_path):
 
 def test_interarrival_replayed_batch_is_noop(spark, tmp_path):
     from kafka2delta_spark.streaming.incremental import (
-        apply_interarrival_batch,
+        apply_batch,
+        interarrival_fold,
     )
 
     store = ParquetStateStore(spark, str(tmp_path / "gap"))
     b0 = _gap_events(spark, [(1, "click", 0, 1), (1, "click", 2, 2)])
-    assert apply_interarrival_batch(store, b0, 0) is True
+    assert apply_batch(store, b0, 0, interarrival_fold) is True
     before = _cells(store)
     # additive cell counts make the ledger load-bearing: replay must skip
-    assert apply_interarrival_batch(store, b0, 0) is False
+    assert apply_batch(store, b0, 0, interarrival_fold) is False
     assert _cells(store) == before
 
 
 def test_interarrival_last_seen_rolls_forward(spark, tmp_path):
     from kafka2delta_spark.streaming.incremental import (
-        apply_interarrival_batch,
+        apply_batch,
+        interarrival_fold,
     )
 
     store = ParquetStateStore(spark, str(tmp_path / "gap2"))
-    apply_interarrival_batch(
-        store, _gap_events(spark, [(1, "click", 0, 1)]), 0
+    apply_batch(
+        store, _gap_events(spark, [(1, "click", 0, 1)]), 0, interarrival_fold
     )
-    apply_interarrival_batch(
-        store, _gap_events(spark, [(1, "click", 7, 2)]), 1
+    apply_batch(
+        store, _gap_events(spark, [(1, "click", 7, 2)]), 1, interarrival_fold
     )
     last = (
         store.read()

@@ -306,7 +306,8 @@ def test_streaming_cusum_replay_is_noop_and_matches_batch(spark, tmp_path):
     )
     from kafka2delta_spark.state.store import ParquetStateStore
     from kafka2delta_spark.streaming.incremental import (
-        apply_daily_count_batch,
+        apply_batch,
+        daily_count_fold,
     )
     from kafka2delta_spark.sources.tables import load_table
 
@@ -314,12 +315,12 @@ def test_streaming_cusum_replay_is_noop_and_matches_batch(spark, tmp_path):
     b0 = events.filter(F.col("event_id") % 2 == 0)
     b1 = events.filter(F.col("event_id") % 2 == 1)
     store = ParquetStateStore(spark, str(tmp_path / "state"))
-    assert apply_daily_count_batch(store, b0, 0) is True
-    assert apply_daily_count_batch(store, b0, 0) is False  # replay no-op
+    assert apply_batch(store, b0, 0, daily_count_fold) is True
+    assert apply_batch(store, b0, 0, daily_count_fold) is False  # replay no-op
     snap = {tuple(r) for r in store.read().collect()}
-    apply_daily_count_batch(store, b0, 0)
+    apply_batch(store, b0, 0, daily_count_fold)
     assert {tuple(r) for r in store.read().collect()} == snap
-    assert apply_daily_count_batch(store, b1, 1) is True
+    assert apply_batch(store, b1, 1, daily_count_fold) is True
     # maintained table == batch aggregate
     want = {
         (r["event_type"], str(r["day"]), r["cnt"])

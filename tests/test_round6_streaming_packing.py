@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from kafka2delta_spark.state.store import ParquetStateStore
-from kafka2delta_spark.streaming.incremental import apply_presence_batch
+from kafka2delta_spark.streaming.incremental import apply_batch, presence_fold
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -40,9 +40,9 @@ def test_presence_merge_is_idempotent_without_ledger(spark, store):
     (so the ledger does not absorb the replay) and the state must not
     change."""
     b = _events(spark, [(1, 0), (1, 0), (2, 1), (2, 1)])
-    apply_presence_batch(store, b, 0)
+    apply_batch(store, b, 0, presence_fold)
     s1 = sorted(tuple(r) for r in store.read().collect())
-    apply_presence_batch(store, b, 1)  # replay content, new batch id
+    apply_batch(store, b, 1, presence_fold)  # replay content, new batch id
     s2 = sorted(tuple(r) for r in store.read().collect())
     assert s1 == s2
     assert len(s1) == 2  # distinct (user, week) only
@@ -53,14 +53,14 @@ def test_presence_out_of_order_recohorts_user(spark, store):
     cohort — the property additive cell maintenance cannot deliver."""
     from kafka2delta_spark.operators.analytic import retention_matrix
 
-    apply_presence_batch(store, _events(spark, [(1, 5), (1, 6)]), 0)
+    apply_batch(store, _events(spark, [(1, 5), (1, 6)]), 0, presence_fold)
     m1 = {
         (r["cohort_week"], r["week_offset"]): r["n_active"]
         for r in retention_matrix(store.read()).collect()
     }
     cohort1 = min(c for c, _ in m1)
     # the user's first activity actually happened in week 2 — arrives late
-    apply_presence_batch(store, _events(spark, [(1, 2)]), 1)
+    apply_batch(store, _events(spark, [(1, 2)]), 1, presence_fold)
     m2 = {
         (r["cohort_week"], r["week_offset"]): r["n_active"]
         for r in retention_matrix(store.read()).collect()
@@ -72,9 +72,9 @@ def test_presence_out_of_order_recohorts_user(spark, store):
 
 
 def test_stale_batch_id_skipped(spark, store):
-    assert apply_presence_batch(store, _events(spark, [(1, 0)]), 5)
-    assert not apply_presence_batch(store, _events(spark, [(9, 9)]), 5)
-    assert not apply_presence_batch(store, _events(spark, [(9, 9)]), 4)
+    assert apply_batch(store, _events(spark, [(1, 0)]), 5, presence_fold)
+    assert not apply_batch(store, _events(spark, [(9, 9)]), 5, presence_fold)
+    assert not apply_batch(store, _events(spark, [(9, 9)]), 4, presence_fold)
     users = {r["user_id"] for r in store.read().collect()}
     assert users == {1}
 
@@ -139,24 +139,25 @@ def _state(store):
 
 def test_interval_merge_is_idempotent_and_order_free(spark, tmp_path):
     from kafka2delta_spark.streaming.incremental import (
-        apply_session_interval_batch,
+        apply_batch,
+        session_interval_fold,
     )
 
     b1 = _iv_events(spark, [(1, 0), (1, 10), (2, 0)])
     b2 = _iv_events(spark, [(1, 20), (2, 200)])
     # order A
     sa = ParquetStateStore(spark, str(tmp_path / "a"))
-    apply_session_interval_batch(sa, b1, 0)
-    apply_session_interval_batch(sa, b2, 1)
+    apply_batch(sa, b1, 0, session_interval_fold)
+    apply_batch(sa, b2, 1, session_interval_fold)
     # replay with a NEW batch id (ledger does not absorb it) — no change
     before = _state(sa)
-    apply_session_interval_batch(sa, b2, 2)
+    apply_batch(sa, b2, 2, session_interval_fold)
     assert _state(sa) == before
     # order B (batches swapped) — same final state: gap-merge is a
     # closure operation, stage order cannot matter
     sb = ParquetStateStore(spark, str(tmp_path / "b"))
-    apply_session_interval_batch(sb, b2, 0)
-    apply_session_interval_batch(sb, b1, 1)
+    apply_batch(sb, b2, 0, session_interval_fold)
+    apply_batch(sb, b1, 1, session_interval_fold)
     assert _state(sa) == _state(sb)
     # user 1: events at 0/10/20 min merge into ONE interval; user 2's
     # 0 and 200 min stay separate (> 30 min gap)
@@ -171,15 +172,16 @@ def test_bridging_batch_fuses_intervals(spark, tmp_path):
     """An event landing in the gap between two maintained intervals must
     fuse them — the property per-session additive state cannot deliver."""
     from kafka2delta_spark.streaming.incremental import (
-        apply_session_interval_batch,
+        apply_batch,
+        session_interval_fold,
     )
 
     store = ParquetStateStore(spark, str(tmp_path / "s"))
     # two sessions 50 minutes apart -> separate (gap > 30 min)
-    apply_session_interval_batch(store, _iv_events(spark, [(1, 0), (1, 50)]), 0)
+    apply_batch(store, _iv_events(spark, [(1, 0), (1, 50)]), 0, session_interval_fold)
     assert len(_state(store)) == 2
     # a late event at minute 25 is within 30-min gap reach of BOTH
-    apply_session_interval_batch(store, _iv_events(spark, [(1, 25)]), 1)
+    apply_batch(store, _iv_events(spark, [(1, 25)]), 1, session_interval_fold)
     st = _state(store)
     assert len(st) == 1
     u, s, e = st[0]

@@ -13,7 +13,6 @@ between the halves.
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pytest
 
@@ -242,10 +241,4 @@ def test_degenerate_midpoint_fails_loudly(spark, tmp_path):
             st._events_multibatch_dir(spark, sf)
     finally:
         st._SPLIT_DIRS.pop((sf, st.SPLIT_FRAC), None)
-        stf = os.stat(f"{sf}/events.parquet")
-        leftover = os.path.join(
-            tempfile.gettempdir(),
-            f"events_split3_{sf.strip('/').replace('/', '_')}"
-            f"_{stf.st_mtime_ns}_{stf.st_size}",
-        )
-        shutil.rmtree(leftover, ignore_errors=True)
+        shutil.rmtree(st._split_dir(sf), ignore_errors=True)
